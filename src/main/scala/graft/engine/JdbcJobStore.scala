@@ -81,6 +81,25 @@ object JdbcJobStore {
       // contain the phrase would be misreported as "already installed".
       (state.isEmpty && msg.contains("already exists"))
     }
+
+  /** SQLState 40001 (serialization failure): the database chose this
+    * statement as a deadlock victim and rolled it back. Derby raises it
+    * when concurrent connections lock-wait on each other's rows. */
+  def isDeadlock(e: SQLException): Boolean =
+    chain(e).exists(ex => ex.getSQLState == "40001")
+
+  /** Run `body` again, up to `attempts` times in all, while it loses a
+    * deadlock. Only for idempotent autocommit statements: a victim's
+    * statement was rolled back whole, so re-running it is the retry the
+    * database expects. Any other failure, and the last deadlock, propagate. */
+  def retryOnDeadlock[A](attempts: Int)(body: => A): A =
+    try body
+    catch {
+      case e: SQLException if attempts > 1 && isDeadlock(e) => retryOnDeadlock(attempts - 1)(body)
+    }
+
+  /** Attempts per idempotent statement that may lose a deadlock. */
+  private[engine] val DeadlockAttempts = 5
 }
 
 final class JdbcJobStore(url: String) extends JobStore with AutoCloseable {
@@ -321,18 +340,26 @@ final class JdbcJobStore(url: String) extends JobStore with AutoCloseable {
   /** One unconditional UPDATE, exactly the reference's heartbeat
     * (jdbc.clj:210-212) — liveness is not a CAS-worthy transition, and a
     * single statement halves the round-trips of a read-then-CAS and can
-    * never be silently dropped on a version race. */
+    * never be silently dropped on a version race; retried if it loses a
+    * deadlock. */
   override def heartbeatJob(id: String): Unit = {
-    exec("UPDATE overseer_jobs SET heartbeat = ?, updated_at = ? WHERE id = ?",
-      Seq(now, now, id))
+    JdbcJobStore.retryOnDeadlock(JdbcJobStore.DeadlockAttempts) {
+      exec("UPDATE overseer_jobs SET heartbeat = ?, updated_at = ? WHERE id = ?",
+        Seq(now, now, id))
+    }
     ()
   }
 
   /** Transitive dependents via the reference's iterative frontier over
     * `overseer_dependencies` (jdbc.clj:96-116), then one bulk UPDATE. Only
     * non-terminal rows transition ({unstarted,started}→aborted), matching
-    * the FSM and the other backends. */
+    * the FSM and the other backends. The frontier reads and the UPDATE are
+    * idempotent, so an abort that loses a deadlock is re-run whole. */
   override def abortJob(id: String): Unit = lock.synchronized {
+    JdbcJobStore.retryOnDeadlock(JdbcJobStore.DeadlockAttempts)(abortOnce(id))
+  }
+
+  private def abortOnce(id: String): Unit = {
     val targets = mutable.Set(id)
     var frontier = Set(id)
     while (frontier.nonEmpty) {

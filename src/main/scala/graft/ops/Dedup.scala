@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -64,40 +64,74 @@ object Dedup {
   def minhashSig(hashedShingles: Column, k: Int): Column =
     graft.functions.VectorFunctions.minhash_sig(hashedShingles, k)
 
+  /** A document's 3-token shingle SET as int64 hashes, sorted ascending and
+    * distinct: the one representation the near-dup operators (q28, q57,
+    * q109) sign, band, prefix-index and verify. Each hash is
+    * `xxhash64(t1, t2, t3)`, which chains the three token hashes, so the
+    * shingle string "t1 t2 t3" is never materialized (tokens are \w+, so
+    * the triple↔string map is bijective and set sizes are preserved modulo
+    * 64-bit collisions). Shingles come from the ORIGINAL token sequence,
+    * never a deduped array: shingles are adjacency-dependent. Built by the
+    * native codegen'd [[graft.functions.ShingleSet]] (bit-identical to the
+    * `transform(sequence(...), i -> xxhash64(...))` HOF spelling, which
+    * runs interpreted). Callers keep only docs with at least 3 tokens. */
+  def shingleSet(toks: Column): Column =
+    graft.functions.VectorFunctions.shingle_set(toks, 3)
+
+  /** Exact Jaccard ≥ 0.5 verify of candidate pairs `(id_a, id_b)` against
+    * the shingle-set frame `sets(doc_id, shd, sz)` (shd from [[shingleSet]]):
+    * one codegen'd two-pointer merge count per candidate
+    * ([[graft.functions.SortedIntersectCount]], no hash set, no
+    * intersection or union array), c = |A∩B|, kept iff 2c ≥ na + nb − c
+    * (|A∪B| = na + nb − c), i.e. 3c ≥ na + nb. `jac = c / (na + nb − c)`
+    * divides the same two integers `size(array_intersect)/size(array_union)`
+    * did, so the value is bit-identical. Duplicate candidates stay
+    * duplicate. */
+  def verifyHalfJaccard(cand: DataFrame, sets: DataFrame): DataFrame = {
+    def side(id: String, sh: String, n: String) =
+      sets.select(col("doc_id").as(id), col("shd").as(sh), col("sz").as(n))
+    cand.join(side("id_a", "sh_a", "na"), "id_a")
+      .join(side("id_b", "sh_b", "nb"), "id_b")
+      .withColumn("c", graft.functions.VectorFunctions.sorted_intersect_count(col("sh_a"), col("sh_b")))
+      // 3c ≥ na + nb is 2c ≥ na + nb − c with c named once: the optimizer
+      // inlines c into the filter it pushes into the join condition, so
+      // each reference there is one more merge per candidate
+      .filter(col("c") * 3 >= col("na") + col("nb"))
+      .select(col("id_a"), col("id_b"),
+              (col("c").cast("double") / (col("na") + col("nb") - col("c"))).as("jac"))
+  }
+
   /** MinHash + LSH banding near-dup pairs, verified with exact Jaccard.
-    * Pipeline: 3-token shingle → k=32 minhashes → 16 bands of 2 →
-    * equi-join on (band, band-key) → exact-Jaccard verify ≥ 0.5 on the
-    * candidates only. Banding is the scale path (no quadratic pair scan);
-    * the exact verify makes the OUTPUT exact, so the DuckDB oracle is the
-    * brute-force pair set. Recall at 16×2 for a true pair at jac j is
-    * 1−(1−j²)¹⁶ ≈ 0.99998 at j=0.7; this corpus's pairs are all ≥ 0.7 or
-    * ≤ 0.2 (no pair in between), and the hash functions are fixed, so
-    * candidate generation is deterministic and verified complete by
-    * DedupSpec + the driver gate. */
+    * Pipeline: 3-token shingle set ([[shingleSet]], built and checkpointed
+    * ONCE — signing and the verify both read it) → k=32 minhashes → 16
+    * bands of 2 → equi-join on (band, band-key) → the shared merge-count
+    * verify [[verifyHalfJaccard]] (2·|A∩B| ≥ |A∪B|) on the candidates only.
+    * Banding is the scale path (no quadratic pair scan); the exact verify
+    * makes the OUTPUT exact, so the DuckDB oracle is the brute-force pair
+    * set. Recall at 16×2 for a true pair at jac j is 1−(1−j²)¹⁶ ≈ 0.99998
+    * at j=0.7; this corpus's pairs are all ≥ 0.7 or ≤ 0.2 (no pair in
+    * between), and the hash functions are fixed, so candidate generation
+    * is deterministic and verified complete by OpsSpec + the DuckDB oracle gate.
+    * The signature is a min over the SET, so signing the sorted distinct
+    * array gives the same bands as signing the raw shingle sequence. */
   val q28MinhashLsh: QueryDef = QueryDef(
     "q28_minhash_lsh",
     (s, dir) => {
       val k = 32
       val bands = 16
-      // shingles come from the ORIGINAL token sequence — never a deduped
-      // array: array_distinct/list_distinct ordering is engine-specific,
-      // and shingles are adjacency-dependent
       // single-row-group scan → repartition before the CPU-heavy shingle
-      // hashing + signature work so it spans the pool (see q57)
-      val docs = Tables(s, dir).documents
-        .repartition(s.sparkContext.defaultParallelism)
+      // hashing + signature work so it spans the pool (see q57); by doc_id
+      // hash, since a round-robin repartition first sorts every row's bytes
+      // (spark.sql.execution.sortBeforeRepartition) in the one scan task
+      val sets = Tables(s, dir).documents
+        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
         .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
         .filter(size(col("toks")) >= 3)
-      // 3-token shingles hashed DIRECTLY to int64 — xxhash64(t1,t2,t3)
-      // chains the three token hashes, so the shingle string "t1 t2 t3"
-      // is never materialized (tokens are \w+, so the triple↔string map
-      // is bijective and set sizes are preserved modulo 64-bit
-      // collisions); signature, banding, and the exact verify all run on
-      // longs from this point on
-      val shingled = docs.withColumn("hsh",
-        expr("transform(sequence(0, size(toks)-3), i -> xxhash64(toks[i], toks[i+1], toks[i+2]))"))
-        .withColumn("sig", minhashSig(col("hsh"), k))
-      val banded = shingled.select(col("doc_id"),
+        .select(col("doc_id"), shingleSet(col("toks")).as("shd"))
+        .select(col("doc_id"), col("shd"), size(col("shd")).as("sz"),
+                minhashSig(col("shd"), k).as("sig"))
+        .localCheckpoint() // banding AND the verify read it: one shingle pass
+      val banded = sets.select(col("doc_id"),
           posexplode(transform(sequence(lit(0), lit(bands - 1)),
             b => xxhash64(element_at(col("sig"), b * 2 + 1),
                           element_at(col("sig"), b * 2 + 2)))))
@@ -110,17 +144,7 @@ object Dedup {
       val pairs = aSide.join(bSide, Seq("band", "band_hash"))
         .filter(col("id_a") < col("id_b"))
         .select(col("id_a"), col("id_b")).distinct()
-      // exact verify on hashed shingle SETS: jaccard only needs sizes, and
-      // intersecting int64 arrays beats intersecting shingle strings
-      val sh = shingled.select(col("doc_id"), array_distinct(col("hsh")).as("shd"))
-      pairs
-        .join(sh.select(col("doc_id").as("id_a"), col("shd").as("sh_a")), Seq("id_a"))
-        .join(sh.select(col("doc_id").as("id_b"), col("shd").as("sh_b")), Seq("id_b"))
-        .withColumn("jac",
-          size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-            size(array_union(col("sh_a"), col("sh_b"))))
-        .filter(col("jac") >= 0.5)
-        .select(col("id_a"), col("id_b"), col("jac"))
+      verifyHalfJaccard(pairs, sets)
     },
     Some("""WITH t AS (SELECT doc_id,
           regexp_extract_all(lower(text), '\w+') AS toks
@@ -365,65 +389,83 @@ object Dedup {
       FROM rk GROUP BY 1"""))
 
   /** EXACT similarity self-join at scale via prefix filtering (the
-    * AllPairs/PPJoin family, Bayardo et al. WWW'07) — the deterministic
-    * twin of q28: same contract (shingle-Jaccard ≥ 0.5 pairs, exact
-    * values, same oracle), but completeness holds BY CONSTRUCTION instead
-    * of by MinHash recall. Each doc's distinct hashed shingles are
-    * ordered rarest-first (ascending document frequency); a pair with
-    * Jaccard ≥ t MUST share a shingle within the first
-    * |d| − ⌈t·|d|⌉ + 1 of that ordering, so candidates come from an
-    * equi-join on PREFIX shingles only — the common shingles that drive
-    * the quadratic blowup never join. A length filter
-    * (t·|a| ≤ |b| ≤ |a|/t) prunes further; exact array-intersect Jaccard
-    * verifies candidates. Shingles (not tokens): this corpus's docs share
-    * most of their VOCABULARY (token-Jaccard ≥ 0.5 for 74% of all pairs —
-    * inherently quadratic output), while 3-token shingles separate true
-    * near-dups from template overlap. At 100 TB: df is a shingle-keyed
-    * hash-agg, prefixes shrink the join to rare shingles, the verify
-    * touches candidates only — no quadratic stage (PlanGuard-checked),
-    * no probabilistic recall argument needed.
+    * AllPairs/PPJoin family, Bayardo et al. WWW'07; Xiao et al. WWW'08) —
+    * the deterministic twin of q28: same contract (shingle-Jaccard ≥ 0.5
+    * pairs, exact values, same oracle), but completeness holds BY
+    * CONSTRUCTION instead of by MinHash recall. Each doc's shingle set
+    * ([[shingleSet]], built and checkpointed once: the prefix build and
+    * the verify both read it) is ordered rarest-first (ascending document
+    * frequency, ties by hash); a pair with Jaccard ≥ t = 1/2 MUST share a
+    * shingle within the first |d| − ⌈|d|/2⌉ + 1 of that ordering, so
+    * candidates come from an equi-join on PREFIX shingles only — the
+    * common shingles that drive the quadratic blowup never join. Two
+    * filters ride in the join condition, both integer forms at t = 1/2:
+    *  - length: |a|/2 ≤ |b| ≤ 2·|a|;
+    *  - position (PPJoin): a pair's FIRST shared shingle, at rank pos_a in
+    *    a and pos_b in b, lies in both prefixes and bounds the overlap by
+    *    1 + min(|a| − pos_a, |b| − pos_b), while J ≥ 1/2 needs
+    *    |A∩B| ≥ (|a| + |b|)/3; a joined row survives only if
+    *    3·(1 + min(|a| − pos_a, |b| − pos_b)) ≥ |a| + |b|. Rows on later
+    *    shared shingles may fail it — the first one never does, so no
+    *    true pair is lost (sf0.1: 329k joined rows → 132k).
+    * Candidates go straight to the shared merge-count verify
+    * [[verifyHalfJaccard]] and only the verified rows are deduplicated:
+    * the positional filter leaves few duplicate rows (132k rows for 125k
+    * pairs at sf0.1), so this costs ~5% extra merge counts and saves a
+    * shuffle of every candidate, and the CPU-heavy verify runs in a map
+    * stage on every core instead of in the result stage. Shingles (not
+    * tokens): this corpus's docs share most of their VOCABULARY
+    * (token-Jaccard ≥ 0.5 for 74% of all pairs — inherently quadratic
+    * output), while 3-token shingles separate true near-dups from
+    * template overlap. At 100 TB: df is a count over the h-partitioned
+    * (doc, h) rows, prefixes
+    * shrink the join to rare shingles, the verify touches candidates only
+    * — no quadratic stage (PlanGuard-checked), no probabilistic recall
+    * argument needed.
     */
   val q109PrefixFilterJoin: QueryDef = QueryDef(
     "q109_prefix_filter_join",
     (s, dir) => {
-      val t = 0.5
-      val docs = Tables(s, dir).documents
-        .repartition(s.sparkContext.defaultParallelism)
+      val n = s.sparkContext.defaultParallelism
+      val sets = Tables(s, dir).documents
+        .repartition(n, col("doc_id"))
         .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
         .filter(size(col("toks")) >= 3)
-        .withColumn("shd", array_distinct(
-          expr("transform(sequence(0, size(toks)-3), i -> xxhash64(toks[i], toks[i+1], toks[i+2]))")))
-        .select(col("doc_id"), col("shd"))
+        .select(col("doc_id"), shingleSet(col("toks")).as("shd"))
+        .select(col("doc_id"), col("shd"), size(col("shd")).as("sz"))
         .localCheckpoint() // shared by prefix build AND verify — one shingle pass
-      val sh = docs.select(col("doc_id"), explode(col("shd")).as("h"),
-                           size(col("shd")).as("sz"))
-      val df = sh.groupBy(col("h")).agg(count(lit(1)).as("df"))
+      // document frequency as a count window over h-partitions: the
+      // (doc, h) rows shuffle once by h, with no df hash-agg to broadcast
+      // and join back
+      val sh = sets.select(col("doc_id"), explode(col("shd")).as("h"), col("sz"))
+        .repartition(n, col("h"))
+        .withColumn("df", count(lit(1)).over(Window.partitionBy(col("h"))))
       // (r16 examined: a collect_list + sort_array + slice prefix build
       // measured SLOWER than this window — 2.65 → 4.12 s dedicated — the
       // object-agg buffers and interpreted array sort cost more than the
       // window's sort at every scale tested; kept the window.)
       val wDoc = Window.partitionBy(col("doc_id"))
         .orderBy(col("df").asc, col("h").asc)
-      val prefix = sh.join(df, "h")
+      // prefix length |d| − ⌈|d|/2⌉ + 1 = ⌊|d|/2⌋ + 1. Both windows sit on
+      // explicit repartitions (AQE would coalesce their shuffles to 1-2
+      // partitions, idling cores), and the prefix is checkpointed: both
+      // sides of the self-join read it, and without the cut the verify is
+      // planned into the result stage (measured 2.4 s vs 1.5 s at sf0.1)
+      val prefix = sh.repartition(n, col("doc_id"))
         .withColumn("pos", row_number().over(wDoc))
-        .filter(col("pos") <= col("sz") - ceil(lit(t) * col("sz")) + 1)
-        .select(col("h"), col("doc_id"), col("sz"))
+        .filter(col("pos") <= floor(col("sz") / 2) + 1)
+        .select(col("h"), col("doc_id"), col("sz"), col("pos"))
+        .localCheckpoint()
       val cand = prefix.as("a")
         .join(prefix.as("b"),
           col("a.h") === col("b.h") &&
             col("a.doc_id") < col("b.doc_id") &&
-            col("b.sz") * lit(t) <= col("a.sz") &&
-            col("a.sz") * lit(t) <= col("b.sz"))
+            col("b.sz") <= col("a.sz") * 2 &&
+            col("a.sz") <= col("b.sz") * 2 &&
+            (least(col("a.sz") - col("a.pos"), col("b.sz") - col("b.pos")) + 1) * 3 >=
+              col("a.sz") + col("b.sz"))
         .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-        .distinct()
-      cand
-        .join(docs.select(col("doc_id").as("id_a"), col("shd").as("sh_a")), "id_a")
-        .join(docs.select(col("doc_id").as("id_b"), col("shd").as("sh_b")), "id_b")
-        .withColumn("jac",
-          size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-            size(array_union(col("sh_a"), col("sh_b"))))
-        .filter(col("jac") >= t)
-        .select(col("id_a"), col("id_b"), col("jac"))
+      verifyHalfJaccard(cand, sets).distinct()
     },
     // same brute-force oracle contract as q28: the shingle string ↔
     // xxhash64 triple map is bijective modulo 64-bit collisions

@@ -61,10 +61,11 @@ object Pipelines {
     "q57_corpus_pipeline",
     (s, dir) => {
       // single-row-group scan → spread the CPU-heavy tokenize/gate/hash
-      // work across the pool; the exchange is paid ONCE because `exact`
-      // below is checkpointed before its three consumers
+      // work across the pool (by doc_id hash, as in q28); the exchange is
+      // paid ONCE because `exact` below is checkpointed before its three
+      // consumers
       val base = Tables(s, dir).documents
-        .repartition(s.sparkContext.defaultParallelism)
+        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
         .withColumn("tk", TextOps.tokens(col("text")))
         .filter(size(col("tk")) >= 10)
         .withColumn("stop_ratio",
@@ -76,15 +77,12 @@ object Pipelines {
         .withColumn("rn", row_number().over(
           Window.partitionBy(col("fp")).orderBy(col("doc_id").asc)))
         .filter(col("rn") === 1)
-        // 3-token shingles hashed straight to int64 (xxhash64 chains the
-        // three tokens; the triple↔string map is bijective modulo 64-bit
-        // collisions — same construction q28's oracle gate validates).
-        // Sorted+distinct so the verify can use the zero-alloc merge-count
-        // expression; the signature needs one pass over the same array.
-        .select(col("doc_id"), col("lang"),
-                array_sort(array_distinct(expr(
-                  "transform(sequence(0, size(tk)-3), i -> xxhash64(tk[i], tk[i+1], tk[i+2]))"))).as("shd"),
+        // q28's shingle set (sorted distinct int64 hashes, the construction
+        // q28's oracle gate validates): the shared verify's merge count
+        // needs it sorted; the signature needs one pass over the same array
+        .select(col("doc_id"), col("lang"), Dedup.shingleSet(col("tk")).as("shd"),
                 size(col("tk")).cast("long").as("n_tokens"))
+        .withColumn("sz", size(col("shd")))
         .withColumn("sig", Dedup.minhashSig(col("shd"), 32))
         // three consumers read `exact` (banding + the verify's shingle-set
         // lookup + the final aggregate): checkpoint so the tokenize→gate→
@@ -107,17 +105,11 @@ object Pipelines {
                                 col("doc_id").as("ib"))
       val cand = aSide.join(bSide, Seq("lang", "band", "band_hash"))
         .filter(col("ia") < col("ib"))
-        .select(col("ia"), col("ib")).distinct()
-      // exact verify on the candidates only: jac ≥ 0.5 ⟺ 3·|A∩B| ≥ sa+sb
-      // (|A∪B| = sa+sb−|A∩B|) — one codegen'd two-pointer merge count per
-      // candidate pair, exact ints, no union materialized
-      val sh = exact.select(col("doc_id"), col("shd"), size(col("shd")).as("ssz"))
-      val nearDupIds = cand
-        .join(sh.select(col("doc_id").as("ia"), col("shd").as("sa"), col("ssz").as("na")), Seq("ia"))
-        .join(sh.select(col("doc_id").as("ib"), col("shd").as("sb"), col("ssz").as("nb")), Seq("ib"))
-        .filter(graft.functions.VectorFunctions.sorted_intersect_count(col("sa"), col("sb")) * 3
-                  >= col("na") + col("nb"))
-        .select(col("ib").as("doc_id")).distinct()
+        .select(col("ia").as("id_a"), col("ib").as("id_b")).distinct()
+      // exact verify on the candidates only, through the near-dup
+      // operators' shared merge-count verify (q28, q109)
+      val nearDupIds = Dedup.verifyHalfJaccard(cand, exact)
+        .select(col("id_b").as("doc_id")).distinct()
       exact.join(nearDupIds, Seq("doc_id"), "left_anti")
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"),

@@ -212,4 +212,33 @@ class JdbcStoreSpec extends AnyFunSuite with JobStoreBehaviors {
     assert(JdbcJobStore.isAlreadyExists(new SQLException("[SQLITE_ERROR] SQL error or missing database (table overseer_jobs already exists)", null, 1)))
     assert(!JdbcJobStore.isAlreadyExists(new SQLException("syntax error", "42000", 0)))
   }
+
+  test("deadlock retry: a body that loses one deadlock (40001) succeeds on the next attempt") {
+    val calls = new AtomicInteger(0)
+    val r = JdbcJobStore.retryOnDeadlock(3) {
+      if (calls.incrementAndGet() == 1)
+        throw new SQLException("A lock could not be obtained due to a deadlock", "40001", 30000)
+      "ok"
+    }
+    assert(r == "ok" && calls.get == 2)
+    // the chained (batch) form is recognized too
+    val outer = new SQLException("batch failed", "XJ208", 0)
+    outer.setNextException(new SQLException("deadlock", "40001", 30000))
+    assert(JdbcJobStore.isDeadlock(outer))
+  }
+
+  test("deadlock retry: other SQLStates propagate at once, and the attempts are bounded") {
+    val calls = new AtomicInteger(0)
+    val e = intercept[SQLException](JdbcJobStore.retryOnDeadlock(3) {
+      calls.incrementAndGet()
+      throw new SQLException("lock wait timeout", "40XL1", 30000)
+    })
+    assert(e.getSQLState == "40XL1" && calls.get == 1)
+    calls.set(0)
+    val d = intercept[SQLException](JdbcJobStore.retryOnDeadlock(3) {
+      calls.incrementAndGet()
+      throw new SQLException("deadlock", "40001", 30000)
+    })
+    assert(d.getSQLState == "40001" && calls.get == 3)
+  }
 }

@@ -138,28 +138,96 @@ class OpsSpec extends SparkTestBase {
     assert(graft.SparkEntry.entry(spark).count() > 0)
   }
 
-  test("prefix-filter join is exact: identical pair set to brute force AND to the MinHash path") {
-    val fast = Dedup.q109PrefixFilterJoin.fn(spark, sfDir).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val docs = Tables(spark, sfDir).documents
+  /** Brute-force shingle-Jaccard ≥ 0.5 pairs of the corpus at `dir`, with
+    * the `size(array_intersect) / size(array_union)` value per pair. */
+  private def brutePairs(dir: String): Map[(Long, Long), Double] = {
+    val docs = Tables(spark, dir).documents
       .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= 3)
       .withColumn("shd", array_distinct(expr(
         "transform(sequence(0, size(toks)-3), i -> xxhash64(toks[i], toks[i+1], toks[i+2]))")))
-    val brute = docs.select(col("doc_id").as("id_a"), col("shd").as("sh_a"))
+    docs.select(col("doc_id").as("id_a"), col("shd").as("sh_a"))
       .crossJoin(docs.select(col("doc_id").as("id_b"), col("shd").as("sh_b")))
       .filter(col("id_a") < col("id_b"))
-      .filter(size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-        size(array_union(col("sh_a"), col("sh_b"))) >= 0.5)
-      .select(col("id_a"), col("id_b"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      .withColumn("jac", size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
+        size(array_union(col("sh_a"), col("sh_b"))))
+      .filter(col("jac") >= 0.5)
+      .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b")) -> r.getAs[Double]("jac"))
+      .toMap
+  }
+
+  private def pairsOf(q: QueryDef, dir: String): Map[(Long, Long), Double] = {
+    val rows = q.fn(spark, dir).collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
+    assert(rows.length == rows.map(_._1).distinct.length, s"${q.name} repeats a pair")
+    rows.toMap
+  }
+
+  /** Same pairs, and every jac equal to the brute-force double bit for bit. */
+  private def assertSameJac(got: Map[(Long, Long), Double], want: Map[(Long, Long), Double]): Unit = {
+    assert(got.keySet == want.keySet)
+    got.foreach { case (k, v) =>
+      assert(java.lang.Double.doubleToRawLongBits(v) == java.lang.Double.doubleToRawLongBits(want(k)),
+        s"pair $k: jac $v != brute force ${want(k)}")
+    }
+  }
+
+  test("prefix-filter join is exact: identical pair set to brute force AND to the MinHash path") {
+    val brute = brutePairs(sfDir)
     assert(brute.nonEmpty, "fixture must contain near-dup pairs")
-    assert(fast == brute) // completeness AND precision — no candidate lost to the prefix cut
+    // completeness AND precision — no candidate lost to the prefix or
+    // positional cut — and the merge-count jac equals the hash-set value
+    assertSameJac(pairsOf(Dedup.q109PrefixFilterJoin, sfDir), brute)
     // the two scale paths — deterministic prefix filter and probabilistic
     // MinHash banding — must agree pair-for-pair on this fixture
-    val minhash = Dedup.q28MinhashLsh.fn(spark, sfDir).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(fast == minhash)
+    assertSameJac(pairsOf(Dedup.q28MinhashLsh, sfDir), brute)
+  }
+
+  test("prefix-filter join at its filters' edges: J = 0.5, |b| = |a|/2, positional bound") {
+    // Each doc is a run of fresh tokens followed by a token run C it shares
+    // with its partner: k fresh tokens + a shared run of s + 2 tokens give
+    // k unique (df 1) and s shared shingles. Rarest-first puts the unique
+    // shingles first, so a pair's first shared shingle sits at rank k + 1,
+    // where the positional bound 3·(1 + min(|a| − pos_a, |b| − pos_b)) =
+    // 3s meets |a| + |b| exactly when J = s / (|a| + |b| − s) = 1/2.
+    import spark.implicits._
+    var next = 0
+    def fresh(n: Int): Seq[String] = Seq.fill(n) { next += 1; s"w$next" }
+    val docs = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
+    def pair(ka: Int, kb: Int, s: Int): (Long, Long) = {
+      val c = fresh(s + 2)
+      docs += fresh(ka) ++ c; docs += fresh(kb) ++ c
+      (docs.size - 2L, docs.size - 1L)
+    }
+    // J = 1/2, sizes 3 and 3: the ONLY shared shingle in either prefix
+    // (prefix ⌊3/2⌋ + 1 = 2) is at rank 2, exactly on the positional bound
+    val onlyPrefix = pair(1, 1, 2)
+    val equal = pair(4, 4, 8)            // J = 8/16, sizes 12 and 12
+    val skewed = pair(1, 3, 4)           // J = 4/8, sizes 5 and 7
+    val below = pair(2, 2, 3)            // J = 3/7 < 1/2
+    val above = pair(1, 1, 5)            // J = 5/7
+    // length-filter boundary |b| = |a|/2 with B ⊂ A: J = 5/10
+    val c = fresh(12)
+    docs += c; docs += c.take(7)
+    val lengthEdge = (docs.size - 2L, docs.size - 1L)
+    // |b| < |a|/2, B ⊂ A: J = 9/20, cut by the length filter
+    val d = fresh(22)
+    docs += d; docs += d.take(11)
+    val tooShort = (docs.size - 2L, docs.size - 1L)
+    // three docs over one shared run (shared shingles have df 3): J = 1/2 each
+    val t = fresh(4)
+    val triple = (0 until 3).map { _ => docs += fresh(1) ++ t; docs.size - 1L }
+    (0 until 20).foreach(_ => docs += fresh(12)) // unrelated docs
+    val tmp = java.nio.file.Files.createTempDirectory("pf").toString
+    docs.toSeq.zipWithIndex.map { case (ts, i) => (i.toLong, ts.mkString(" ")) }
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+
+    val brute = brutePairs(tmp)
+    val expected = Set(onlyPrefix, equal, skewed, above, lengthEdge) ++
+      triple.combinations(2).map(p => (p(0), p(1)))
+    assert(brute.keySet == expected)
+    assert(!brute.contains(below) && !brute.contains(tooShort))
+    assert(Seq(onlyPrefix, equal, skewed, lengthEdge).forall(p => brute(p) == 0.5))
+    assertSameJac(pairsOf(Dedup.q109PrefixFilterJoin, tmp), brute)
   }
 
   test("weighted sample: deterministic, size-capped, and weight-biased") {
