@@ -88,15 +88,18 @@ object JdbcJobStore {
   def isDeadlock(e: SQLException): Boolean =
     chain(e).exists(ex => ex.getSQLState == "40001")
 
-  /** Run `body` again, up to `attempts` times in all, while it loses a
-    * deadlock. Only for idempotent autocommit statements: a victim's
+  /** Run `body` again, up to [[DeadlockAttempts]] times in all, while it
+    * loses a deadlock. Only for idempotent autocommit statements: a victim's
     * statement was rolled back whole, so re-running it is the retry the
     * database expects. Any other failure, and the last deadlock, propagate. */
-  def retryOnDeadlock[A](attempts: Int)(body: => A): A =
-    try body
-    catch {
-      case e: SQLException if attempts > 1 && isDeadlock(e) => retryOnDeadlock(attempts - 1)(body)
-    }
+  def retryOnDeadlock[A](body: => A): A = {
+    def attempt(left: Int): A =
+      try body
+      catch {
+        case e: SQLException if left > 1 && isDeadlock(e) => attempt(left - 1)
+      }
+    attempt(DeadlockAttempts)
+  }
 
   /** Attempts per idempotent statement that may lose a deadlock. */
   private[engine] val DeadlockAttempts = 5
@@ -343,7 +346,7 @@ final class JdbcJobStore(url: String) extends JobStore with AutoCloseable {
     * never be silently dropped on a version race; retried if it loses a
     * deadlock. */
   override def heartbeatJob(id: String): Unit = {
-    JdbcJobStore.retryOnDeadlock(JdbcJobStore.DeadlockAttempts) {
+    JdbcJobStore.retryOnDeadlock {
       exec("UPDATE overseer_jobs SET heartbeat = ?, updated_at = ? WHERE id = ?",
         Seq(now, now, id))
     }
@@ -356,7 +359,7 @@ final class JdbcJobStore(url: String) extends JobStore with AutoCloseable {
     * the FSM and the other backends. The frontier reads and the UPDATE are
     * idempotent, so an abort that loses a deadlock is re-run whole. */
   override def abortJob(id: String): Unit = lock.synchronized {
-    JdbcJobStore.retryOnDeadlock(JdbcJobStore.DeadlockAttempts)(abortOnce(id))
+    JdbcJobStore.retryOnDeadlock(abortOnce(id))
   }
 
   private def abortOnce(id: String): Unit = {

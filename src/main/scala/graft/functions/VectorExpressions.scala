@@ -177,12 +177,6 @@ case class SortedIntersectCount(left: Expression, right: Expression) extends Bin
     c
   }
 
-  // null-element checks are generated only for a side whose element type
-  // is nullable: shingle-hash arrays (xxhash64 never yields null) skip them
-  // in the merge loop
-  private def containsNull(e: Expression): Boolean =
-    e.dataType.asInstanceOf[ArrayType].containsNull
-
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
       val nx = ctx.freshName("nx")
@@ -192,15 +186,13 @@ case class SortedIntersectCount(left: Expression, right: Expression) extends Bin
       val c = ctx.freshName("c")
       val xv = ctx.freshName("xv")
       val yv = ctx.freshName("yv")
-      val skipNullX = if (containsNull(left)) s"if ($a.isNullAt($i)) { $i++; continue; }" else ""
-      val skipNullY = if (containsNull(right)) s"if ($b.isNullAt($j)) { $j++; continue; }" else ""
       s"""
          |int $nx = $a.numElements();
          |int $ny = $b.numElements();
          |int $i = 0; int $j = 0; int $c = 0;
          |while ($i < $nx && $j < $ny) {
-         |  $skipNullX
-         |  $skipNullY
+         |  if ($a.isNullAt($i)) { $i++; continue; }
+         |  if ($b.isNullAt($j)) { $j++; continue; }
          |  long $xv = $a.getLong($i);
          |  long $yv = $b.getLong($j);
          |  if ($xv == $yv) { $c++; $i++; $j++; }
@@ -214,16 +206,18 @@ case class SortedIntersectCount(left: Expression, right: Expression) extends Bin
     copy(left = l, right = r)
 }
 
-/** A token array's k-token shingle SET as int64 hashes, sorted ascending
+/** A token array's 3-token shingle SET as int64 hashes, sorted ascending
   * and distinct, as ONE expression. Each shingle's hash is exactly
-  * `xxhash64(t(i), …, t(i+k-1))` (XXH64 over each token's UTF-8 bytes,
-  * seeded 42 and chained, null tokens skipped), so the values equal the
-  * `array_sort(array_distinct(transform(sequence(0, n-k), i ->
-  * xxhash64(...))))` spelling bit for bit; that spelling runs interpreted,
-  * with k boxed lambda evaluations per shingle, then hashes every element
-  * into a set and sorts through a comparator. Fewer than k tokens give an
-  * empty set. Both eval paths call [[ShingleKernel.hashes]]. */
-case class ShingleSet(child: Expression, k: Int)
+  * `xxhash64(t(i), t(i+1), t(i+2))` (XXH64 over each token's UTF-8 bytes,
+  * seeded 42 and chained, null tokens skipped). For arrays of at least 3
+  * tokens the values equal the `array_sort(array_distinct(transform(
+  * sequence(0, n-3), i -> xxhash64(...))))` spelling bit for bit; that
+  * spelling runs interpreted, with 3 boxed lambda evaluations per shingle,
+  * then hashes every element into a set and sorts through a comparator.
+  * Below 3 tokens the two differ: `sequence(0, n-3)` counts down and hashes
+  * out-of-range tokens, while ShingleSet returns the empty set by design.
+  * Both eval paths call [[ShingleKernel.hashes]]. */
+case class ShingleSet(child: Expression)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
   import org.apache.spark.sql.types.{LongType, StringType}
 
@@ -232,18 +226,18 @@ case class ShingleSet(child: Expression, k: Int)
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     child.dataType match {
       // other collations hash a collation key in xxhash64, not the bytes
-      case ArrayType(st: StringType, _) if st.collationId == StringType.collationId && k >= 1 =>
+      case ArrayType(st: StringType, _) if st.collationId == StringType.collationId =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case t =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"shingle_set requires array<string> (UTF8_BINARY) and k >= 1, got $t, k = $k")
+          s"shingle_set requires array<string> (UTF8_BINARY), got $t")
     }
 
   override def nullSafeEval(input: Any): Any =
-    ShingleKernel.hashes(input.asInstanceOf[ArrayData], k)
+    ShingleKernel.hashes(input.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.functions.ShingleKernel.hashes($a, $k)")
+    defineCodeGen(ctx, ev, a => s"graft.functions.ShingleKernel.hashes($a)")
 
   override protected def withNewChildInternal(c: Expression): ShingleSet = copy(child = c)
 }
@@ -254,14 +248,17 @@ object ShingleKernel {
   /** Seed of Spark's `xxhash64` function. */
   private val Seed = 42L
 
-  def hashes(toks: ArrayData, k: Int): ArrayData = {
-    val m = math.max(0, toks.numElements() - k + 1)
+  /** Tokens per shingle. */
+  private val K = 3
+
+  def hashes(toks: ArrayData): ArrayData = {
+    val m = math.max(0, toks.numElements() - K + 1)
     val hs = new Array[Long](m)
     var i = 0
     while (i < m) {
       var h = Seed
       var j = i
-      while (j < i + k) {
+      while (j < i + K) {
         if (!toks.isNullAt(j)) {
           val t = toks.getUTF8String(j)
           h = XXH64.hashUnsafeBytes(t.getBaseObject, t.getBaseOffset, t.numBytes, h)
@@ -774,9 +771,9 @@ object VectorFunctions {
   }
 
   /** Column-level API for [[ShingleSet]]: the sorted distinct int64
-    * hashes of `toks`' k-token shingles. */
-  def shingle_set(toks: Column, k: Int): Column =
-    ColumnBridge.column(ShingleSet(ColumnBridge.expression(toks), k))
+    * hashes of `toks`' 3-token shingles. */
+  def shingle_set(toks: Column): Column =
+    ColumnBridge.column(ShingleSet(ColumnBridge.expression(toks)))
 
   /** Column-level API for [[SortedIntersectCount]] — inputs must be
     * sorted + distinct. */

@@ -72,11 +72,12 @@ object Dedup {
     * the triple↔string map is bijective and set sizes are preserved modulo
     * 64-bit collisions). Shingles come from the ORIGINAL token sequence,
     * never a deduped array: shingles are adjacency-dependent. Built by the
-    * native codegen'd [[graft.functions.ShingleSet]] (bit-identical to the
-    * `transform(sequence(...), i -> xxhash64(...))` HOF spelling, which
-    * runs interpreted). Callers keep only docs with at least 3 tokens. */
+    * native codegen'd [[graft.functions.ShingleSet]]. Callers keep only
+    * docs with at least 3 tokens; on those the result is bit-identical to
+    * the `transform(sequence(...), i -> xxhash64(...))` HOF spelling, which
+    * runs interpreted. */
   def shingleSet(toks: Column): Column =
-    graft.functions.VectorFunctions.shingle_set(toks, 3)
+    graft.functions.VectorFunctions.shingle_set(toks)
 
   /** Exact Jaccard ≥ 0.5 verify of candidate pairs `(id_a, id_b)` against
     * the shingle-set frame `sets(doc_id, shd, sz)` (shd from [[shingleSet]]):

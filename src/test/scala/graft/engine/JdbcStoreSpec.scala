@@ -215,7 +215,7 @@ class JdbcStoreSpec extends AnyFunSuite with JobStoreBehaviors {
 
   test("deadlock retry: a body that loses one deadlock (40001) succeeds on the next attempt") {
     val calls = new AtomicInteger(0)
-    val r = JdbcJobStore.retryOnDeadlock(3) {
+    val r = JdbcJobStore.retryOnDeadlock {
       if (calls.incrementAndGet() == 1)
         throw new SQLException("A lock could not be obtained due to a deadlock", "40001", 30000)
       "ok"
@@ -229,16 +229,16 @@ class JdbcStoreSpec extends AnyFunSuite with JobStoreBehaviors {
 
   test("deadlock retry: other SQLStates propagate at once, and the attempts are bounded") {
     val calls = new AtomicInteger(0)
-    val e = intercept[SQLException](JdbcJobStore.retryOnDeadlock(3) {
+    val e = intercept[SQLException](JdbcJobStore.retryOnDeadlock {
       calls.incrementAndGet()
       throw new SQLException("lock wait timeout", "40XL1", 30000)
     })
     assert(e.getSQLState == "40XL1" && calls.get == 1)
     calls.set(0)
-    val d = intercept[SQLException](JdbcJobStore.retryOnDeadlock(3) {
+    val d = intercept[SQLException](JdbcJobStore.retryOnDeadlock {
       calls.incrementAndGet()
       throw new SQLException("deadlock", "40001", 30000)
     })
-    assert(d.getSQLState == "40001" && calls.get == 3)
+    assert(d.getSQLState == "40001" && calls.get == JdbcJobStore.DeadlockAttempts)
   }
 }
