@@ -152,8 +152,6 @@ final class JdbcJobStore(url: String) extends JobStore with AutoCloseable {
     }
   }
 
-  private def now: Long = System.currentTimeMillis() / 1000L
-
   // -- row codec -------------------------------------------------------------
 
   private def readJob(rs: ResultSet): Job = Job(
@@ -325,21 +323,6 @@ final class JdbcJobStore(url: String) extends JobStore with AutoCloseable {
       if (n == 1) Some(u) else None
     }
 
-  override def reserveJob(id: String): Option[Job] =
-    updateJob(id, _.status == JobStatus.Unstarted,
-      _.copy(status = JobStatus.Started, heartbeat = Some(now)))
-
-  override def finishJob(id: String): Unit = {
-    val r = updateJob(id, _.status == JobStatus.Started, _.copy(status = JobStatus.Finished))
-    if (r.isEmpty) throw new IllegalStateException(s"finish-job: job $id not in started state")
-  }
-
-  override def failJob(id: String, failure: Option[String]): Unit = {
-    val r = updateJob(id, _.status == JobStatus.Started,
-      _.copy(status = JobStatus.Failed, failure = failure))
-    if (r.isEmpty) throw new IllegalStateException(s"fail-job: job $id not in started state")
-  }
-
   /** One unconditional UPDATE, exactly the reference's heartbeat
     * (jdbc.clj:210-212) — liveness is not a CAS-worthy transition, and a
     * single statement halves the round-trips of a read-then-CAS and can
@@ -384,23 +367,9 @@ final class JdbcJobStore(url: String) extends JobStore with AutoCloseable {
     ()
   }
 
-  override def resetJob(id: String): Option[Job] =
-    updateJob(id, _.status == JobStatus.Started,
-      _.copy(status = JobStatus.Unstarted, heartbeat = None))
-
   /** The scheduler's readiness anti-join, pushed to the database exactly as
     * the reference does (jdbc.clj:230-242): unstarted AND id not among jobs
     * with any non-finished dependency. */
-  override def jobsReady(limit: Int): Set[String] =
-    query(
-      s"""SELECT id FROM overseer_jobs
-         |WHERE status = ${JobStatus.code(JobStatus.Unstarted)}
-         |  AND id NOT IN (
-         |    SELECT d.job_id FROM overseer_dependencies d
-         |    JOIN overseer_jobs p ON p.id = d.dep_id
-         |    WHERE p.status <> ${JobStatus.code(JobStatus.Finished)})
-         |${fetchFirst(limit)}""".stripMargin)(_.getString(1)).toSet
-
   override def readyJobs(limit: Int): Seq[Job] =
     query(
       s"""SELECT * FROM overseer_jobs

@@ -4,8 +4,9 @@ package graft.engine
   * [[LogBackedJobStore]] (single-process durable backend) and
   * [[SharedLogJobStore]] (multi-process backend): one JSON object per line,
   * one line per FSM transition, replayable in order into an
-  * [[InMemoryJobStore]]. Keeping the codec in one place means the two
-  * backends are interchangeable on the same log file.
+  * [[InMemoryJobStore]]. [[LogJobStore]] below writes each line and
+  * [[replay]] reads it back, so the two backends are interchangeable on the
+  * same log file.
   */
 private[engine] object JobLog {
 
@@ -25,12 +26,6 @@ private[engine] object JobLog {
   def encode(kind: String, fields: (String, String)*): String =
     (Seq("op" -> kind) ++ fields)
       .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
-
-  def encodeTransact(fresh: Seq[Job], deps: Seq[Dep]): String =
-    encode("transact",
-      "jobs" -> fresh.map(j => s"${j.id}$US${j.jobType}$US${j.args.getOrElse("")}")
-        .mkString(RS.toString),
-      "deps" -> deps.map(d => s"${d.jobId}$US${d.depId}").mkString(RS.toString))
 
   // crude but dependency-free field extraction (log is machine-written)
   def extract(line: String, key: String): Option[String] = {
@@ -88,4 +83,76 @@ private[engine] object JobLog {
       case other       => throw new IllegalStateException(s"unknown log op $other")
     }
   }
+}
+
+/** The core both log backends share: an [[InMemoryJobStore]] snapshot, and
+  * every FSM transition applied to it and encoded as the log line that
+  * [[JobLog.replay]] decodes. A backend adds only its persistence policy:
+  * how a transition is made atomic with its append, and how a read sees
+  * the current log. */
+private[engine] abstract class LogJobStore extends JobStore {
+  import JobLog.{encode, RS, US}
+
+  protected val inner = new InMemoryJobStore
+
+  /** Run `op` against the snapshot and persist the line it returns, if any,
+    * as one step with respect to every other writer of the log. */
+  protected def logged[A](op: => (A, Option[String])): A
+
+  /** Run `read` against a snapshot that includes every persisted line. */
+  protected def current[A](read: => A): A
+
+  override def transactGraph(g: JobGraph): JobGraph = logged {
+    val fresh = g.jobs.filter(j => inner.jobInfo(j.id).isEmpty)
+    inner.transactGraph(g)
+    val freshIds = fresh.map(_.id).toSet
+    val line = if (fresh.isEmpty) None else Some(encode("transact",
+      "jobs" -> fresh.map(j => s"${j.id}$US${j.jobType}$US${j.args.getOrElse("")}")
+        .mkString(RS.toString),
+      "deps" -> g.deps.filter(d => freshIds.contains(d.jobId))
+        .map(d => s"${d.jobId}$US${d.depId}").mkString(RS.toString)))
+    (g, line)
+  }
+
+  override def reserveJob(id: String): Option[Job] = logged {
+    val r = inner.reserveJob(id)
+    (r, r.map(_ => encode("reserve", "id" -> id)))
+  }
+
+  override def finishJob(id: String): Unit = logged {
+    inner.finishJob(id); ((), Some(encode("finish", "id" -> id)))
+  }
+
+  override def failJob(id: String, failure: Option[String]): Unit = logged {
+    inner.failJob(id, failure)
+    ((), Some(encode("fail", Seq("id" -> id) ++ failure.map("failure" -> _): _*)))
+  }
+
+  override def heartbeatJob(id: String): Unit = logged {
+    inner.heartbeatJob(id)
+    ((), inner.jobInfo(id).flatMap(_.heartbeat).map(h =>
+      encode("heartbeat", "id" -> id, "at" -> h.toString)))
+  }
+
+  override def abortJob(id: String): Unit = logged {
+    inner.abortJob(id); ((), Some(encode("abort", "id" -> id)))
+  }
+
+  override def resetJob(id: String): Option[Job] = logged {
+    val r = inner.resetJob(id)
+    (r, r.map(_ => encode("reset", "id" -> id)))
+  }
+
+  override def jobInfo(id: String): Option[Job] = current(inner.jobInfo(id))
+  override def readyJobs(limit: Int): Seq[Job] = current(inner.readyJobs(limit))
+  override def jobsDead(threshold: Long, limit: Int): Set[String] =
+    current(inner.jobsDead(threshold, limit))
+  override def snapshotJobs: Seq[Job] = current(inner.snapshotJobs)
+  override def snapshotDeps: Seq[Dep] = current(inner.snapshotDeps)
+
+  /** Arbitrary-function update is not log-encodable: this is the
+    * non-durable escape hatch (tests); the FSM ops above are the durable
+    * surface. */
+  override def updateJob(id: String, pred: Job => Boolean, f: Job => Job): Option[Job] =
+    current(inner.updateJob(id, pred, f))
 }

@@ -10,6 +10,10 @@ package graft.engine
   * In Spark terms the store is driver-local and transactional; its state is
   * exposed to distributed computation as DataFrame snapshots via
   * [[StoreViews]].
+  *
+  * The FSM transitions are written once, here, over [[updateJob]]. A
+  * backend implements the storage primitives and overrides a transition
+  * only where it stores it differently.
   */
 trait JobStore {
 
@@ -27,17 +31,27 @@ trait JobStore {
 
   /** CAS unstarted→started + set heartbeat=now; None on lost race
     * (reference core.clj:120-122). */
-  def reserveJob(id: String): Option[Job]
+  def reserveJob(id: String): Option[Job] =
+    updateJob(id, _.status == JobStatus.Unstarted,
+      _.copy(status = JobStatus.Started, heartbeat = Some(now)))
 
   /** CAS started→finished; throws IllegalStateException if stale
     * (reference core.clj:124-126). */
-  def finishJob(id: String): Unit
+  def finishJob(id: String): Unit =
+    if (updateJob(id, _.status == JobStatus.Started, _.copy(status = JobStatus.Finished)).isEmpty)
+      throw new IllegalStateException(s"finish-job: job $id not in started state")
 
   /** CAS started→failed + store failure payload (core.clj:128-131). */
-  def failJob(id: String, failure: Option[String]): Unit
+  def failJob(id: String, failure: Option[String]): Unit =
+    if (updateJob(id, _.status == JobStatus.Started,
+          _.copy(status = JobStatus.Failed, failure = failure)).isEmpty)
+      throw new IllegalStateException(s"fail-job: job $id not in started state")
 
   /** Set heartbeat = now, unconditional w.r.t. status (core.clj:133-135). */
-  def heartbeatJob(id: String): Unit
+  def heartbeatJob(id: String): Unit = {
+    updateJob(id, _ => true, _.copy(heartbeat = Some(now)))
+    ()
+  }
 
   /** Set aborted on the job AND all transitive dependents, one bulk update
     * (core.clj:137-139, jdbc.clj:214-221). */
@@ -45,22 +59,23 @@ trait JobStore {
 
   /** CAS started→unstarted (fault/monitor retry); None if lost race
     * (core.clj:141-143). */
-  def resetJob(id: String): Option[Job]
+  def resetJob(id: String): Option[Job] =
+    updateJob(id, _.status == JobStatus.Started,
+      _.copy(status = JobStatus.Unstarted, heartbeat = None))
 
-  /** Ids that are unstarted AND not blocked by any non-finished dependency —
-    * the scheduler's anti-join (core.clj:145-147, jdbc.clj:230-242). */
-  def jobsReady(limit: Int = Int.MaxValue): Set[String]
+  /** Jobs that are unstarted AND not blocked by any non-finished
+    * dependency — the scheduler's anti-join (core.clj:145-147,
+    * jdbc.clj:230-242), hydrated in one call so the detector makes no
+    * per-id lookups (reference worker.clj:14-22 hydrates per id; this is
+    * the batched form). */
+  def readyJobs(limit: Int = Int.MaxValue): Seq[Job]
+
+  /** Ids of [[readyJobs]]. */
+  def jobsReady(limit: Int = Int.MaxValue): Set[String] =
+    readyJobs(limit).map(_.id).toSet
 
   /** Ids started with heartbeat < threshold (core.clj:149-152). */
   def jobsDead(threshold: Long, limit: Int = Int.MaxValue): Set[String]
-
-  /** [[jobsReady]], hydrated: the ready jobs themselves, not just ids. The
-    * default composes the existing ops; backends with a query engine (JDBC)
-    * override with one round-trip, removing the detector's N+1 point
-    * lookups (reference worker.clj:14-22 does hydrate per-id; this is the
-    * batched form). */
-  def readyJobs(limit: Int = Int.MaxValue): Seq[Job] =
-    jobsReady(limit).toSeq.flatMap(jobInfo)
 
   /** All ids currently in `status` — the modern equivalent of the
     * reference's pre-0.9 Monitoring.md status queries (SURVEY.md §7
@@ -79,6 +94,9 @@ trait JobStore {
   /** Snapshot of all jobs / deps (for the DataFrame views). */
   def snapshotJobs: Seq[Job]
   def snapshotDeps: Seq[Dep]
+
+  /** Unix seconds: the clock of heartbeats and `updatedAt`. */
+  protected def now: Long = System.currentTimeMillis() / 1000L
 }
 
 /** Driver-local transactional store: plain maps under a lock. The CAS
@@ -92,11 +110,7 @@ final class InMemoryJobStore extends JobStore {
   private val lock = new Object
   private var jobs = Map.empty[String, Job]
   private var deps = Vector.empty[Dep]
-  // dep_id -> direct dependents, the jdbc store's deps(dep_id) index
-  private var childIdx = Map.empty[String, Set[String]]
   private var installed = false
-
-  private def now: Long = System.currentTimeMillis() / 1000L
 
   override def install(): String = lock.synchronized {
     require(!installed, "store already installed") // reference install is not idempotent
@@ -110,11 +124,7 @@ final class InMemoryJobStore extends JobStore {
     val freshIds = fresh.map(_.id).toSet
     val t = now
     jobs ++= fresh.map(j => j.id -> j.copy(createdAt = t, updatedAt = t))
-    val freshDeps = g.deps.filter(d => freshIds.contains(d.jobId))
-    deps ++= freshDeps
-    freshDeps.foreach { d =>
-      childIdx = childIdx.updated(d.depId, childIdx.getOrElse(d.depId, Set.empty) + d.jobId)
-    }
+    deps ++= g.deps.filter(d => freshIds.contains(d.jobId))
     g
   }
 
@@ -129,26 +139,6 @@ final class InMemoryJobStore extends JobStore {
       }
     }
 
-  override def reserveJob(id: String): Option[Job] =
-    updateJob(id, _.status == JobStatus.Unstarted,
-      _.copy(status = JobStatus.Started, heartbeat = Some(now)))
-
-  override def finishJob(id: String): Unit = {
-    val r = updateJob(id, _.status == JobStatus.Started, _.copy(status = JobStatus.Finished))
-    if (r.isEmpty) throw new IllegalStateException(s"finish-job: job $id not in started state")
-  }
-
-  override def failJob(id: String, failure: Option[String]): Unit = {
-    val r = updateJob(id, _.status == JobStatus.Started,
-      _.copy(status = JobStatus.Failed, failure = failure))
-    if (r.isEmpty) throw new IllegalStateException(s"fail-job: job $id not in started state")
-  }
-
-  override def heartbeatJob(id: String): Unit = {
-    updateJob(id, _ => true, _.copy(heartbeat = Some(now)))
-    ()
-  }
-
   override def abortJob(id: String): Unit = lock.synchronized {
     val targets = JobGraph.dependents(deps, Set(id)) + id
     val t = now
@@ -161,11 +151,7 @@ final class InMemoryJobStore extends JobStore {
     }
   }
 
-  override def resetJob(id: String): Option[Job] =
-    updateJob(id, _.status == JobStatus.Started,
-      _.copy(status = JobStatus.Unstarted, heartbeat = None))
-
-  override def jobsReady(limit: Int): Set[String] = lock.synchronized {
+  override def readyJobs(limit: Int): Seq[Job] = lock.synchronized {
     // unstarted ∧ no dependency with status ≠ finished (aborted/failed parents
     // also block — datomic_test.clj:14-64)
     val blocked: Set[String] = deps.collect {
@@ -173,7 +159,7 @@ final class InMemoryJobStore extends JobStore {
     }.toSet
     jobs.valuesIterator
       .filter(j => j.status == JobStatus.Unstarted && !blocked.contains(j.id))
-      .map(_.id).take(limit).toSet
+      .take(limit).toVector
   }
 
   override def jobsDead(threshold: Long, limit: Int): Set[String] = lock.synchronized {

@@ -16,18 +16,25 @@ import scala.jdk.CollectionConverters._
   * the snapshot view, and the same log could be replayed into DataFrames
   * (`StoreViews`) or the streaming FSM (`FsmStream.transitions`) unchanged.
   * Single-writer by design — one process owns the log; for a multi-process
-  * pool over the same log see [[SharedLogJobStore]].
+  * pool over the same log see [[SharedLogJobStore]]. Persistence policy
+  * over the shared [[LogJobStore]] core: a process lock around each
+  * transition and its flushed append; replay on open fails loudly on a
+  * corrupt line, except a torn final line, which is dropped and truncated.
   */
-final class LogBackedJobStore(dir: String) extends JobStore {
+final class LogBackedJobStore(dir: String) extends LogJobStore {
 
-  private val inner = new InMemoryJobStore
   private val logPath: Path = Paths.get(dir, "joblog.jsonl")
   private var writer: BufferedWriter = _
   private val lock = new Object
 
-  private def append(line: String): Unit = lock.synchronized {
-    writer.write(line); writer.newLine(); writer.flush()
+  override protected def logged[A](op: => (A, Option[String])): A = lock.synchronized {
+    val (result, line) = op
+    line.foreach { l => writer.write(l); writer.newLine(); writer.flush() }
+    result
   }
+
+  // a single writer's snapshot is always current
+  override protected def current[A](read: => A): A = read
 
   // -- Store protocol ------------------------------------------------------
 
@@ -68,55 +75,6 @@ final class LogBackedJobStore(dir: String) extends JobStore {
     writer = new BufferedWriter(new FileWriter(logPath.toFile, true))
     ":ok"
   }
-
-  override def transactGraph(g: JobGraph): JobGraph = lock.synchronized {
-    val before = inner.snapshotJobs.map(_.id).toSet
-    val out = inner.transactGraph(g)
-    val fresh = g.jobs.filterNot(j => before.contains(j.id))
-    val freshIds = fresh.map(_.id).toSet
-    append(JobLog.encodeTransact(fresh, g.deps.filter(d => freshIds.contains(d.jobId))))
-    out
-  }
-
-  override def jobInfo(id: String): Option[Job] = inner.jobInfo(id)
-
-  override def reserveJob(id: String): Option[Job] = lock.synchronized {
-    val r = inner.reserveJob(id)
-    if (r.isDefined) append(JobLog.encode("reserve", "id" -> id))
-    r
-  }
-
-  override def finishJob(id: String): Unit = lock.synchronized {
-    inner.finishJob(id); append(JobLog.encode("finish", "id" -> id))
-  }
-
-  override def failJob(id: String, failure: Option[String]): Unit = lock.synchronized {
-    inner.failJob(id, failure)
-    append(JobLog.encode("fail", Seq("id" -> id) ++ failure.map("failure" -> _): _*))
-  }
-
-  override def heartbeatJob(id: String): Unit = lock.synchronized {
-    inner.heartbeatJob(id)
-    inner.jobInfo(id).flatMap(_.heartbeat).foreach(h =>
-      append(JobLog.encode("heartbeat", "id" -> id, "at" -> h.toString)))
-  }
-
-  override def abortJob(id: String): Unit = lock.synchronized {
-    inner.abortJob(id); append(JobLog.encode("abort", "id" -> id))
-  }
-
-  override def resetJob(id: String): Option[Job] = lock.synchronized {
-    val r = inner.resetJob(id)
-    if (r.isDefined) append(JobLog.encode("reset", "id" -> id))
-    r
-  }
-
-  override def jobsReady(limit: Int): Set[String] = inner.jobsReady(limit)
-  override def jobsDead(threshold: Long, limit: Int): Set[String] = inner.jobsDead(threshold, limit)
-  override def updateJob(id: String, pred: Job => Boolean, f: Job => Job): Option[Job] =
-    inner.updateJob(id, pred, f) // non-durable escape hatch (used by tests)
-  override def snapshotJobs: Seq[Job] = inner.snapshotJobs
-  override def snapshotDeps: Seq[Dep] = inner.snapshotDeps
 
   def close(): Unit = lock.synchronized(if (writer != null) writer.close())
 }

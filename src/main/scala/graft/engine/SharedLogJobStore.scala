@@ -30,10 +30,13 @@ import java.util.concurrent.ConcurrentHashMap
   * run a small multi-process pool (the store traffic of a pipeline DAG is
   * tiny; the heavy lifting happens inside handlers as Spark jobs). A big
   * pool should use [[JdbcJobStore]] against a database server.
+  *
+  * Persistence policy over the shared [[LogJobStore]] core: the file lock,
+  * catch-up before every operation, an fsync per append, and torn
+  * fragments healed and skipped rather than failing the reader.
   */
-final class SharedLogJobStore(dir: String) extends JobStore with AutoCloseable {
+final class SharedLogJobStore(dir: String) extends LogJobStore with AutoCloseable {
 
-  private val inner = new InMemoryJobStore
   private val logPath  = Paths.get(dir, "joblog.jsonl")
   private val lockPath = Paths.get(dir, "joblog.lck")
   private var pos = 0L // bytes of complete lines already replayed into `inner`
@@ -115,69 +118,14 @@ final class SharedLogJobStore(dir: String) extends JobStore with AutoCloseable {
     } finally raf.close()
   }
 
-  private def mutate[A](op: => (A, Option[String])): A = withFileLock {
+  override protected def logged[A](op: => (A, Option[String])): A = withFileLock {
     catchUp()
     val (result, line) = op
     line.foreach(append)
     result
   }
 
-  private def fresh[A](read: => A): A = { withFileLock(catchUp()); read }
-
-  // -- Store protocol ------------------------------------------------------
-
-  override def transactGraph(g: JobGraph): JobGraph = mutate {
-    val before = inner.snapshotJobs.map(_.id).toSet
-    val out = inner.transactGraph(g)
-    val freshJobs = g.jobs.filterNot(j => before.contains(j.id))
-    val freshIds = freshJobs.map(_.id).toSet
-    if (freshJobs.isEmpty) (out, None)
-    else (out, Some(JobLog.encodeTransact(freshJobs,
-      g.deps.filter(d => freshIds.contains(d.jobId)))))
-  }
-
-  override def jobInfo(id: String): Option[Job] = fresh(inner.jobInfo(id))
-
-  override def reserveJob(id: String): Option[Job] = mutate {
-    val r = inner.reserveJob(id)
-    (r, r.map(_ => JobLog.encode("reserve", "id" -> id)))
-  }
-
-  override def finishJob(id: String): Unit = mutate {
-    inner.finishJob(id); ((), Some(JobLog.encode("finish", "id" -> id)))
-  }
-
-  override def failJob(id: String, failure: Option[String]): Unit = mutate {
-    inner.failJob(id, failure)
-    ((), Some(JobLog.encode("fail", Seq("id" -> id) ++ failure.map("failure" -> _): _*)))
-  }
-
-  override def heartbeatJob(id: String): Unit = mutate {
-    inner.heartbeatJob(id)
-    ((), inner.jobInfo(id).flatMap(_.heartbeat).map(h =>
-      JobLog.encode("heartbeat", "id" -> id, "at" -> h.toString)))
-  }
-
-  override def abortJob(id: String): Unit = mutate {
-    inner.abortJob(id); ((), Some(JobLog.encode("abort", "id" -> id)))
-  }
-
-  override def resetJob(id: String): Option[Job] = mutate {
-    val r = inner.resetJob(id)
-    (r, r.map(_ => JobLog.encode("reset", "id" -> id)))
-  }
-
-  override def jobsReady(limit: Int): Set[String] = fresh(inner.jobsReady(limit))
-  override def jobsDead(threshold: Long, limit: Int): Set[String] =
-    fresh(inner.jobsDead(threshold, limit))
-  override def snapshotJobs: Seq[Job] = fresh(inner.snapshotJobs)
-  override def snapshotDeps: Seq[Dep] = fresh(inner.snapshotDeps)
-
-  /** Arbitrary-function update is not log-encodable; like
-    * [[LogBackedJobStore.updateJob]] this is the single-process escape
-    * hatch (tests) — the FSM ops above are the durable surface. */
-  override def updateJob(id: String, pred: Job => Boolean, f: Job => Job): Option[Job] =
-    fresh(inner.updateJob(id, pred, f))
+  override protected def current[A](read: => A): A = { withFileLock(catchUp()); read }
 
   override def close(): Unit = ()
 }

@@ -17,20 +17,15 @@ class FatalSpec extends AnyFunSuite {
     override def install(): String = inner.install()
     override def transactGraph(g: JobGraph): JobGraph = inner.transactGraph(g)
     override def jobInfo(id: String): Option[Job] = inner.jobInfo(id)
-    override def reserveJob(id: String): Option[Job] = inner.reserveJob(id)
-    override def finishJob(id: String): Unit = inner.finishJob(id)
-    override def failJob(id: String, f: Option[String]): Unit = inner.failJob(id, f)
-    override def heartbeatJob(id: String): Unit = inner.heartbeatJob(id)
     override def abortJob(id: String): Unit = inner.abortJob(id)
-    override def resetJob(id: String): Option[Job] = inner.resetJob(id)
     override def jobsDead(threshold: Long, limit: Int): Set[String] = inner.jobsDead(threshold, limit)
     override def updateJob(id: String, p: Job => Boolean, f: Job => Job): Option[Job] =
       inner.updateJob(id, p, f)
     override def snapshotJobs: Seq[Job] = inner.snapshotJobs
     override def snapshotDeps: Seq[Dep] = inner.snapshotDeps
-    override def jobsReady(limit: Int): Set[String] =
+    override def readyJobs(limit: Int): Seq[Job] =
       if (broken) throw new RuntimeException("db connection lost")
-      else inner.jobsReady(limit)
+      else inner.readyJobs(limit)
   }
 
   test("a store error in the detector loop stops the worker and fires onFatal") {

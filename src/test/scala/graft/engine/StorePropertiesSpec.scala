@@ -6,16 +6,7 @@ import scala.util.Random
 /** Property layer (SURVEY.md §5 "our plan"): FSM and closure invariants
   * over randomized DAGs — seeded generation, 60 cases per property. */
 class StorePropertiesSpec extends AnyFunSuite {
-
-  /** Random DAG: node i may depend only on lower-indexed nodes (acyclic by
-    * construction). */
-  def genDag(rnd: Random): Map[String, Seq[String]] = {
-    val n = 1 + rnd.nextInt(12)
-    (0 until n).map { i =>
-      val parents = (0 until i).filter(_ => rnd.nextDouble() < 0.35).map(j => s"t$j")
-      s"t$i" -> parents
-    }.toMap
-  }
+  import StorePropertiesSpec.genDag
 
   def freshStore(adj: Map[String, Seq[String]]): (InMemoryJobStore, Map[String, String]) = {
     val s = new InMemoryJobStore; s.install()
@@ -82,5 +73,18 @@ class StorePropertiesSpec extends AnyFunSuite {
       val c2 = JobGraph.dependents(deps, roots ++ c1)
       assert((c2 -- c1 -- roots).isEmpty, s"not closed: $deps")
     }
+  }
+}
+
+object StorePropertiesSpec {
+
+  /** Random DAG: node i may depend only on lower-indexed nodes (acyclic by
+    * construction). */
+  def genDag(rnd: Random): Map[String, Seq[String]] = {
+    val n = 1 + rnd.nextInt(12)
+    (0 until n).map { i =>
+      val parents = (0 until i).filter(_ => rnd.nextDouble() < 0.35).map(j => s"t$j")
+      s"t$i" -> parents
+    }.toMap
   }
 }

@@ -150,9 +150,8 @@ trait JobStoreBehaviors { this: AnyFunSuite =>
     }
 
     test("install returns :ok once (core.clj:108-110)") {
-      val s = freshStore()
-      // freshStore() may or may not pre-install; a fresh InMemory store does not
-      ()
+      val s = freshStore() // installed once already
+      intercept[IllegalArgumentException](s.install())
     }
   }
 }
