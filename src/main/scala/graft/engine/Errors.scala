@@ -38,17 +38,9 @@ object Errors {
     * `{:reason :system/exception, :exception Class, :message ...}`
     * (errors.clj:70-81). */
   def failureJson(e: Throwable): String = {
-    def esc(s: String): String =
-      Option(s).getOrElse("").flatMap {
-        case '"'  => "\\\""
-        case '\\' => "\\\\"
-        case '\n' => "\\n"
-        case '\r' => "\\r"
-        case '\t' => "\\t"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      }
-    s"""{"reason":"system/exception","exception":"${esc(e.getClass.getName)}","message":"${esc(e.getMessage)}"}"""
+    import Reporter.Json.quote
+    s"""{"reason":"system/exception","exception":${quote(e.getClass.getName)},""" +
+      s""""message":${quote(Option(e.getMessage).getOrElse(""))}}"""
   }
 
   /** Exception → FSM exit status (errors.clj:70-81): abort/fault signals

@@ -9,23 +9,16 @@ package graft.engine
   * same log file.
   */
 private[engine] object JobLog {
+  import Reporter.Json.quote
 
   // record/unit separators for packing multiple jobs/deps into one line
   val RS = '\u001e'
   val US = '\u001f'
 
-  private def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-    case '\r' => "\\r"; case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-  private def jstr(s: String) = "\"" + esc(s) + "\""
-
   /** Encode one transition as a single log line (no trailing newline). */
   def encode(kind: String, fields: (String, String)*): String =
     (Seq("op" -> kind) ++ fields)
-      .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${quote(k)}:${quote(v)}" }.mkString("{", ",", "}")
 
   // crude but dependency-free field extraction (log is machine-written)
   def extract(line: String, key: String): Option[String] = {
@@ -103,14 +96,12 @@ private[engine] abstract class LogJobStore extends JobStore {
   protected def current[A](read: => A): A
 
   override def transactGraph(g: JobGraph): JobGraph = logged {
-    val fresh = g.jobs.filter(j => inner.jobInfo(j.id).isEmpty)
+    val inserts = g.jobs.nonEmpty && g.jobs.forall(j => inner.jobInfo(j.id).isEmpty)
     inner.transactGraph(g)
-    val freshIds = fresh.map(_.id).toSet
-    val line = if (fresh.isEmpty) None else Some(encode("transact",
-      "jobs" -> fresh.map(j => s"${j.id}$US${j.jobType}$US${j.args.getOrElse("")}")
+    val line = if (!inserts) None else Some(encode("transact",
+      "jobs" -> g.jobs.map(j => s"${j.id}$US${j.jobType}$US${j.args.getOrElse("")}")
         .mkString(RS.toString),
-      "deps" -> g.deps.filter(d => freshIds.contains(d.jobId))
-        .map(d => s"${d.jobId}$US${d.depId}").mkString(RS.toString)))
+      "deps" -> g.deps.map(d => s"${d.jobId}$US${d.depId}").mkString(RS.toString)))
     (g, line)
   }
 

@@ -20,10 +20,11 @@ trait JobStore {
   /** Create state tables; returns ":ok" (reference core.clj:108-110). */
   def install(): String
 
-  /** Atomically insert all jobs + deps. Idempotent on job ids: an id that
-    * already exists is NOT re-inserted and NEVER updated (no upsert).
-    * Returns the graph unchanged. Reference core.clj:112-115,
-    * jdbc.clj:169-185, semantics test store_test.clj:27-40. */
+  /** Atomically insert all jobs + deps, all or nothing: a graph naming any
+    * id that already exists inserts none of its jobs or deps, and an
+    * existing job is NEVER updated (no upsert). Returns the graph
+    * unchanged. Reference core.clj:112-115, jdbc.clj:169-185, semantics
+    * test store_test.clj:27-40. */
   def transactGraph(g: JobGraph): JobGraph
 
   /** Point lookup by id (reference core.clj:117-118). */
@@ -120,11 +121,11 @@ final class InMemoryJobStore extends JobStore {
 
   override def transactGraph(g: JobGraph): JobGraph = lock.synchronized {
     require(g.isValid, s"invalid graph: $g") // assert at transact, jdbc.clj:170
-    val fresh = g.jobs.filterNot(j => jobs.contains(j.id)) // insert-if-absent, never upsert
-    val freshIds = fresh.map(_.id).toSet
-    val t = now
-    jobs ++= fresh.map(j => j.id -> j.copy(createdAt = t, updatedAt = t))
-    deps ++= g.deps.filter(d => freshIds.contains(d.jobId))
+    if (!g.jobs.exists(j => jobs.contains(j.id))) {
+      val t = now
+      jobs ++= g.jobs.map(j => j.id -> j.copy(createdAt = t, updatedAt = t))
+      deps ++= g.deps
+    }
     g
   }
 

@@ -96,8 +96,10 @@ object Reporter {
 
   /** Minimal JSON writer for the wire payload — the value shapes are
     * exactly what [[filterSerializable]] admits (strings, numbers,
-    * booleans, null, seqs, string-keyed maps). */
-  private[engine] object Json {
+    * booleans, null, seqs, string-keyed maps). `quote` is the project's
+    * one JSON string escaper (job log lines, failure payloads, the oracle
+    * SQL dump): backslash, quote and every control character. */
+  private[graft] object Json {
     def quote(s: String): String = {
       val b = new StringBuilder("\"")
       s.foreach {

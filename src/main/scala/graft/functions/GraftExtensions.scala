@@ -3,11 +3,12 @@ package graft.functions
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Session-extension registration — the library's SQL surface. Sessions
   * built with `spark.sql.extensions=graft.functions.GraftExtensions` get
   * every reusable primitive as a SQL function from the start (the
-  * live-session path is `VectorFunctions.registerSql`): vector dot /
+  * live-session path is `GraftExtensions.registerSql`): vector dot /
   * cosine, the order-exact PQ distance, MinHash/SimHash signatures,
   * Z-order interleave, sorted-set intersection, count-min probe, bloom
   * agg/probe — plus the Levenshtein plan guard and the native as-of join
@@ -21,71 +22,54 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("vector_dot"),
-      new ExpressionInfo(classOf[VectorDot].getName, "vector_dot"),
-      (exprs: Seq[Expression]) => VectorDot(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("vector_cosine"),
-      new ExpressionInfo(classOf[VectorDot].getName, "vector_cosine"),
-      (exprs: Seq[Expression]) => GraftExtensions.cosineExpr(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("decimal_sqdist"),
-      new ExpressionInfo(classOf[DecimalSqDist].getName, "decimal_sqdist"),
-      (exprs: Seq[Expression]) => DecimalSqDist(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinhashSig].getName, "minhash_sig"),
-      (exprs: Seq[Expression]) => MinhashSig(exprs(0),
-        GraftExtensions.foldableInt(exprs(1), "minhash_sig(hashes, k)"))))
-    e.injectFunction((
-      FunctionIdentifier("simhash_sig"),
-      new ExpressionInfo(classOf[SimhashSig].getName, "simhash_sig"),
-      (exprs: Seq[Expression]) => SimhashSig(exprs(0))))
-    e.injectFunction((
-      FunctionIdentifier("z_interleave"),
-      new ExpressionInfo(classOf[ZInterleave].getName, "z_interleave"),
-      (exprs: Seq[Expression]) => ZInterleave(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("hilbert_index"),
-      new ExpressionInfo(classOf[HilbertIndex].getName, "hilbert_index"),
-      (exprs: Seq[Expression]) => HilbertIndex(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("sorted_intersect_count"),
-      new ExpressionInfo(classOf[SortedIntersectCount].getName, "sorted_intersect_count"),
-      (exprs: Seq[Expression]) => SortedIntersectCount(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("bloom_filter_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "bloom_filter_agg"),
-      (exprs: Seq[Expression]) =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          exprs(0), exprs(1)).toAggregateExpression()))
-    e.injectFunction((
-      FunctionIdentifier("might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "might_contain"),
-      (exprs: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("multi_contains"),
-      new ExpressionInfo(classOf[MultiContains].getName, "multi_contains"),
-      (exprs: Seq[Expression]) => MultiContains(exprs(0),
-        GraftExtensions.foldableStringArray(exprs(1),
-          "multi_contains(text, patterns)").toSeq)))
-    e.injectFunction((
-      FunctionIdentifier("cms_estimate"),
-      new ExpressionInfo(classOf[CmsEstimate].getName, "cms_estimate"),
-      (exprs: Seq[Expression]) => CmsEstimate(exprs(0), exprs(1))))
+    GraftExtensions.sqlFunctions.foreach { case (name, cls, build) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    }
     e.injectOptimizerRule(_ => LevenshteinLengthGuard)
     e.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
   }
 }
 
 object GraftExtensions {
-  /** Builders shared by the extension and the live-session registry. */
+  import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+  import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+
+  /** The library's SQL functions: name → (implementing class, builder).
+    * The extension and the live-session [[registerSql]] both register
+    * exactly this table. `bloom_filter_agg(key, estimatedNumItems)` and
+    * `might_contain(bloom, key)` are Spark's internal bloom build/probe
+    * pair (used by the runtime-filter injection but never SQL-registered);
+    * the bloom side of a probe must be a constant or an uncorrelated
+    * scalar subquery — the pre-shuffle pruning shape. */
+  private[functions] val sqlFunctions
+      : Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("vector_dot", classOf[VectorDot], e => VectorDot(e(0), e(1))),
+    ("vector_cosine", classOf[VectorDot], e => cosineExpr(e(0), e(1))),
+    ("decimal_sqdist", classOf[DecimalSqDist], e => DecimalSqDist(e(0), e(1))),
+    ("minhash_sig", classOf[MinhashSig], e =>
+      MinhashSig(e(0), foldableInt(e(1), "minhash_sig(hashes, k)"))),
+    ("simhash_sig", classOf[SimhashSig], e => SimhashSig(e(0))),
+    ("z_interleave", classOf[ZInterleave], e => ZInterleave(e(0), e(1))),
+    ("hilbert_index", classOf[HilbertIndex], e => HilbertIndex(e(0), e(1))),
+    ("sorted_intersect_count", classOf[SortedIntersectCount], e =>
+      SortedIntersectCount(e(0), e(1))),
+    ("bloom_filter_agg", classOf[BloomFilterAggregate], e =>
+      new BloomFilterAggregate(e(0), e(1)).toAggregateExpression()),
+    ("might_contain", classOf[BloomFilterMightContain], e =>
+      BloomFilterMightContain(e(0), e(1))),
+    ("multi_contains", classOf[MultiContains], e => MultiContains(e(0),
+      foldableStringArray(e(1), "multi_contains(text, patterns)").toSeq)),
+    ("cms_estimate", classOf[CmsEstimate], e => CmsEstimate(e(0), e(1))))
+
+  /** Expose the library's SQL functions to a LIVE session
+    * (`SELECT minhash_sig(hs, 32) FROM ...`) — the same table the
+    * extension injects at startup. */
+  def registerSql(spark: org.apache.spark.sql.SparkSession): Unit =
+    sqlFunctions.foreach { case (name, _, build) =>
+      ColumnBridge.registerFunction(spark, name, build)
+    }
+
   private[functions] def cosineExpr(a: Expression, b: Expression): Expression = {
     import org.apache.spark.sql.catalyst.expressions.{Divide, Multiply, Sqrt}
     Divide(VectorDot(a, b),

@@ -2,12 +2,9 @@ package graft.functions
 
 import java.io.ByteArrayInputStream
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression}
-import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.CountMinSketch
@@ -72,29 +69,5 @@ object CmsEstimate {
       cache.put(key, s)
     }
     s.estimateCount(item.toString)
-  }
-}
-
-/** SQL registration for the sketch surface: Spark's internal bloom-filter
-  * build/probe pair (used by the optimizer's runtime-filter injection but
-  * never SQL-registered) plus [[CmsEstimate]].
-  *
-  *  - `bloom_filter_agg(key, estimatedNumItems)` — aggregate a long key
-  *    column into a serialized bloom filter.
-  *  - `might_contain(bloom, key)` — probe; the bloom side must be a
-  *    constant or an uncorrelated scalar subquery (the expression's own
-  *    type check enforces it), which is exactly the pre-shuffle pruning
-  *    shape: build on the small filtered side, probe the big side before
-  *    it shuffles.
-  *  - `cms_estimate(sketch, item)` — see [[CmsEstimate]].
-  */
-object SketchFunctions {
-  def registerSql(spark: SparkSession): Unit = {
-    ColumnBridge.registerFunction(spark, "bloom_filter_agg",
-      exprs => new BloomFilterAggregate(exprs(0), exprs(1)).toAggregateExpression())
-    ColumnBridge.registerFunction(spark, "might_contain",
-      exprs => BloomFilterMightContain(exprs(0), exprs(1)))
-    ColumnBridge.registerFunction(spark, "cms_estimate",
-      exprs => CmsEstimate(exprs(0), exprs(1)))
   }
 }

@@ -779,33 +779,4 @@ object VectorFunctions {
     * sorted + distinct. */
   def sorted_intersect_count(a: Column, b: Column): Column =
     ColumnBridge.column(SortedIntersectCount(ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  /** Expose the library's primitives to the SQL surface of a LIVE session
-    * (`SELECT minhash_sig(hs, 32) FROM ...`) — same set as the at-startup
-    * `GraftExtensions`; see that class for the catalog. */
-  def registerSql(spark: org.apache.spark.sql.SparkSession): Unit = {
-    ColumnBridge.registerFunction(spark, "vector_dot",
-      exprs => VectorDot(exprs(0), exprs(1)))
-    ColumnBridge.registerFunction(spark, "vector_cosine",
-      exprs => GraftExtensions.cosineExpr(exprs(0), exprs(1)))
-    ColumnBridge.registerFunction(spark, "decimal_sqdist",
-      exprs => DecimalSqDist(exprs(0), exprs(1)))
-    ColumnBridge.registerFunction(spark, "minhash_sig",
-      exprs => MinhashSig(exprs(0),
-        GraftExtensions.foldableInt(exprs(1), "minhash_sig(hashes, k)")))
-    ColumnBridge.registerFunction(spark, "simhash_sig",
-      exprs => SimhashSig(exprs(0)))
-    ColumnBridge.registerFunction(spark, "z_interleave",
-      exprs => ZInterleave(exprs(0), exprs(1)))
-    ColumnBridge.registerFunction(spark, "hilbert_index",
-      exprs => HilbertIndex(exprs(0), exprs(1)))
-    ColumnBridge.registerFunction(spark, "sorted_intersect_count",
-      exprs => SortedIntersectCount(exprs(0), exprs(1)))
-    ColumnBridge.registerFunction(spark, "cms_estimate",
-      exprs => CmsEstimate(exprs(0), exprs(1)))
-    ColumnBridge.registerFunction(spark, "multi_contains",
-      exprs => MultiContains(exprs(0),
-        GraftExtensions.foldableStringArray(exprs(1),
-          "multi_contains(text, patterns)").toSeq))
-  }
 }

@@ -14,8 +14,8 @@ import org.apache.spark.sql.expressions.Window
   * src/overseer/executor.clj:12-39; q473's SCC is the core subroutine).
   *
   * Scale shape: GraphBase's one trade scan + a 1-row order-statistic
-  * cut; the reachability fixpoint runs on the |V|²-bounded backbone
-  * census with localCheckpoint every level (the q21/q473 discipline).
+  * cut; the reachability closure and SCC labels come from q473's
+  * [[SccOps.reachAndScc]] on the |V|²-bounded backbone.
   *
   * Exactness: all labels are MIN-id integers; CORE election is by
   * (size DESC, scc_id) — every column BIGINT/string-deterministic.
@@ -34,29 +34,7 @@ object BowtieOps {
         .select(col("w").as("tau"))
       val edges = raw.crossJoin(broadcast(tau)).where(col("w") >= col("tau"))
         .select(col("u"), col("v")).localCheckpoint()
-      var reach = edges.select(col("u").as("s"), col("v").as("t"))
-        .distinct().localCheckpoint()
-      var n = reach.count()
-      var done = false
-      while (!done) {
-        val next = reach
-          .join(edges.select(col("u").as("t"), col("v").as("t2")), Seq("t"))
-          .select(col("s"), col("t2").as("t"))
-          .unionByName(reach).distinct().localCheckpoint()
-        val m = next.count()
-        done = m == n; reach = next; n = m
-      }
-      val nodes = edges.select(col("u").as("nk"))
-        .unionByName(edges.select(col("v").as("nk"))).distinct()
-      val mutual = reach.join(
-          reach.select(col("t").as("s"), col("s").as("t")),
-          Seq("s", "t"), "left_semi")
-        .select(col("s").as("nk"), col("t").as("m"))
-      val scc = nodes.join(mutual, Seq("nk"), "left")
-        .groupBy(col("nk"))
-        .agg(min(least(col("nk"), coalesce(col("m"), col("nk"))))
-          .cast("long").as("scc_id"))
-        .localCheckpoint()
+      val (reach, scc) = SccOps.reachAndScc(edges)
       val core = scc.groupBy(col("scc_id")).agg(count(lit(1)).as("sz"))
         .orderBy(col("sz").desc, col("scc_id")).limit(1)
         .select(col("scc_id").as("core_id"))

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Strongly-connected components of the DIRECTED nation trade graph —
@@ -10,10 +11,9 @@ import org.apache.spark.sql.functions._
   * blocs trade in closed circuits?", and the condensation (SCC-level
   * DAG) is what a flow/cascade analysis runs on afterwards.
   *
-  * Algorithm: exact reachability fixpoint (semi-naive not needed at
-  * |V| = |nations|) — R = edges; R ← R ∪ R∘E until the pair count is
-  * stable, localCheckpoint every level (the q21 discipline); then
-  * scc(u) = min({u} ∪ {v : u→v ∧ v→u}), component sizes by one
+  * Algorithm: exact reachability closure as q501's linear Datalog
+  * program, evaluated semi-naively ([[reachAndScc]], shared with q539);
+  * then scc(u) = min({u} ∪ {v : u→v ∧ v→u}), component sizes by one
   * hash-agg, the condensation edge count from one projection of the
   * edge list through the label map. The pair frame is |V|²-bounded —
   * on an entity graph at scale you'd first thin (q432's top-k) or
@@ -26,38 +26,40 @@ import org.apache.spark.sql.functions._
   */
 object SccOps {
 
+  /** The transitive closure `reach(s, t)` of the directed edge list
+    * `edges(u, v)`, and every node's strongly-connected component
+    * `scc(nk, scc_id)` labelled by its minimum member. The closure is
+    * q501's linear program — reach(s,t) ← e(s,t);
+    * reach(s,t) ← reach(s,m) ∧ e(m,t) — so each round joins only the
+    * last round's new pairs; u and v share a component iff each reaches
+    * the other. */
+  def reachAndScc(edges: DataFrame): (DataFrame, DataFrame) = {
+    import graft.plans.Datalog.{Atom, Program, Rule, V}
+    val reach = Program(Seq(
+      Rule(Atom("reach", Seq(V("s"), V("t"))), Seq(Atom("e", Seq(V("s"), V("t"))))),
+      Rule(Atom("reach", Seq(V("s"), V("t"))),
+        Seq(Atom("reach", Seq(V("s"), V("m"))), Atom("e", Seq(V("m"), V("t")))))))
+      .run(Map("e" -> edges.select(col("u"), col("v"))), "reach").toDF("s", "t")
+    val nodes = edges.select(col("u").as("nk"))
+      .unionByName(edges.select(col("v").as("nk"))).distinct()
+    val mutual = reach.join(
+        reach.select(col("t").as("s"), col("s").as("t")),
+        Seq("s", "t"), "left_semi")
+      .select(col("s").as("nk"), col("t").as("m"))
+    val scc = nodes.join(mutual, Seq("nk"), "left")
+      .groupBy(col("nk"))
+      .agg(min(least(col("nk"), coalesce(col("m"), col("nk"))))
+        .cast("long").as("scc_id"))
+      .localCheckpoint() // each caller reads it several times
+    (reach, scc)
+  }
+
   val q473Scc: QueryDef = QueryDef(
     "q473_scc",
     (s, dir) => {
       val edges = GraphBase.tradeEdgesDirected(s, dir)
         .select(col("u"), col("v"))
-      var reach = edges.select(col("u").as("s"), col("v").as("t"))
-        .distinct().localCheckpoint()
-      var n = reach.count()
-      var done = false
-      while (!done) {
-        val next = reach
-          .join(edges.select(col("u").as("t"), col("v").as("t2")), Seq("t"))
-          .select(col("s"), col("t2").as("t"))
-          .unionByName(reach).distinct()
-          .localCheckpoint() // q21 discipline: flat plan every level
-        val m = next.count()
-        done = m == n
-        reach = next
-        n = m
-      }
-      val nodes = edges.select(col("u").as("nk"))
-        .unionByName(edges.select(col("v").as("nk"))).distinct()
-      // u and v are mutually reachable -> same SCC; label = min member
-      val mutual = reach.join(
-          reach.select(col("t").as("s"), col("s").as("t")),
-          Seq("s", "t"), "left_semi")
-        .select(col("s").as("nk"), col("t").as("m"))
-      val scc = nodes.join(mutual, Seq("nk"), "left")
-        .groupBy(col("nk"))
-        .agg(min(least(col("nk"), coalesce(col("m"), col("nk"))))
-          .cast("long").as("scc_id"))
-        .localCheckpoint() // feeds sizes, internal degrees, condensation
+      val (_, scc) = reachAndScc(edges)
       val sizes = scc.groupBy(col("scc_id"))
         .agg(count(lit(1)).as("scc_size"))
       val labeled = edges

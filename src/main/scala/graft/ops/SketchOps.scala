@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.SketchFunctions
+import graft.functions.GraftExtensions
 
 /** Sketch-based operators: the probabilistic summaries a 100 TB engine
   * leans on when exact state would not fit or would shuffle too much —
@@ -30,7 +30,7 @@ object SketchOps {
   val q126BloomPruneJoin: QueryDef = QueryDef(
     "q126_bloom_prune_join",
     (s, dir) => {
-      SketchFunctions.registerSql(s)
+      GraftExtensions.registerSql(s)
       val t = Tables(s, dir)
       t.orders.createOrReplaceTempView("g126_orders")
       t.lineitem.createOrReplaceTempView("g126_lineitem")
@@ -107,7 +107,7 @@ object SketchOps {
   val q128CmsFrequency: QueryDef = QueryDef(
     "q128_cms_frequency",
     (s, dir) => {
-      SketchFunctions.registerSql(s)
+      GraftExtensions.registerSql(s)
       val events = EventOps.events(s, dir)
       val sketchRow = events.agg(
         expr("count_min_sketch(event_type, 0.001d, 0.999d, 42)").as("sk"),

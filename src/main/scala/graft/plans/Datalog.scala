@@ -1,7 +1,9 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.Platform
 
 /** A minimal datalog engine compiled to DataFrame plans — the
   * query-language-diversity analog of the reference's second declarative
@@ -58,10 +60,7 @@ object Datalog {
     * rows are 8-byte padded): consistent with UnsafeRow.equals, which is
     * all the solution-set sort-merge needs; the order itself carries no
     * meaning. */
-  private[plans] def compareRows(
-      a: org.apache.spark.sql.catalyst.expressions.UnsafeRow,
-      b: org.apache.spark.sql.catalyst.expressions.UnsafeRow): Int = {
-    import org.apache.spark.unsafe.Platform
+  private[plans] def compareRows(a: UnsafeRow, b: UnsafeRow): Int = {
     val la = a.getSizeInBytes
     val lb = b.getSizeInBytes
     if (la != lb) return Integer.compare(la, lb)
@@ -115,8 +114,7 @@ object Datalog {
       if (nEntries + extra + 1 > os.length)
         os = java.util.Arrays.copyOf(os,
           math.max(os.length * 2, nEntries + extra + 2))
-    def appendRow(u: org.apache.spark.sql.catalyst.expressions.UnsafeRow): Unit = {
-      import org.apache.spark.unsafe.Platform
+    def appendRow(u: UnsafeRow): Unit = {
       val l = u.getSizeInBytes
       ensureBytes(l); ensureEntries(1)
       Platform.copyMemory(u.getBaseObject, u.getBaseOffset,
@@ -139,9 +137,7 @@ object Datalog {
   }
 
   /** compareRows order between arena entry `i` and an UnsafeRow. */
-  private[plans] def compareEntry(a: Arena, i: Int,
-      u: org.apache.spark.sql.catalyst.expressions.UnsafeRow): Int = {
-    import org.apache.spark.unsafe.Platform
+  private[plans] def compareEntry(a: Arena, i: Int, u: UnsafeRow): Int = {
     val off = a.offs(i); val la = a.offs(i + 1) - off
     val lb = u.getSizeInBytes
     if (la != lb) return Integer.compare(la, lb)
@@ -156,14 +152,76 @@ object Datalog {
     0
   }
 
+  /** The round merge of every head kind. `old` is a partition's state:
+    * keys sorted in compareRows order and rows in matching entry order —
+    * ONE arena in both slots unless `keyed` (a set head's key is its
+    * whole row, so its memory stays one copy). `cand` holds the round's
+    * (key, row) candidates; one walk against the sorted candidates skips
+    * adjacent duplicate keys, copies each unchanged run of `old` with one
+    * appendRange, lands a new key's candidate as is, and on a key match
+    * stores `combine(old row, candidate)`, or keeps the old row when
+    * that is null. Whatever a candidate changes is novel, and the novel
+    * arena holds the CANDIDATE itself (a sum head's contribution, not its
+    * new total). A round with no novel rows returns `old` untouched:
+    * published arenas are never mutated, so a task retry or speculative
+    * re-run replays against the same base and emits the same novel rows. */
+  private[plans] def mergeWalk(
+      old: (Arena, Arena), keyed: Boolean,
+      cand: Array[(UnsafeRow, UnsafeRow)], numFields: Int,
+      combine: (UnsafeRow, UnsafeRow) => UnsafeRow): ((Arena, Arena), Arena) =
+    if (cand.isEmpty) (old, Arena.empty)
+    else {
+      val (okeys, orows) = old
+      java.util.Arrays.sort(cand, ((p, q) => compareRows(p._1, q._1)):
+        java.util.Comparator[(UnsafeRow, UnsafeRow)])
+      val mk = new ArenaBuilder(okeys.bytes.length + 32 * cand.length,
+        okeys.count + cand.length)
+      val mr = if (!keyed) mk else new ArenaBuilder(
+        orows.bytes.length + 32 * cand.length, okeys.count + cand.length)
+      val nov = new ArenaBuilder(1024, 64)
+      val cursor = new UnsafeRow(numFields)
+      def keep(from: Int, to: Int): Unit = {
+        mk.appendRange(okeys, from, to)
+        if (keyed) mr.appendRange(orows, from, to)
+      }
+      var i = 0; var lo = 0; var j = 0
+      while (j < cand.length) {
+        val (k, r) = cand(j)
+        if (j == 0 || compareRows(k, cand(j - 1)._1) != 0) {
+          var cmp = 1
+          while (i < okeys.count && { cmp = compareEntry(okeys, i, k); cmp < 0 })
+            i += 1
+          keep(lo, i) // unchanged run, one memcpy
+          val hit = i < okeys.count && cmp == 0
+          val out =
+            if (!hit) r
+            else {
+              cursor.pointTo(orows.bytes,
+                Platform.BYTE_ARRAY_OFFSET + orows.offs(i), orows.len(i))
+              combine(cursor, r)
+            }
+          if (out == null) keep(i, i + 1)
+          else { mk.appendRow(k); if (keyed) mr.appendRow(out); nov.appendRow(r) }
+          if (hit) i += 1
+          lo = i
+        }
+        j += 1
+      }
+      keep(lo, okeys.count)
+      val novA = nov.result()
+      if (novA.count == 0) (old, novA)
+      else {
+        val ks = mk.result()
+        ((ks, if (keyed) mr.result() else ks), novA)
+      }
+    }
+
   /** Scan an arena as InternalRows through ONE reused cursor (the
     * standard Spark row-iterator contract: valid until next()). */
   private[plans] def arenaRows(a: Arena, numFields: Int)
       : Iterator[org.apache.spark.sql.catalyst.InternalRow] =
     new Iterator[org.apache.spark.sql.catalyst.InternalRow] {
-      import org.apache.spark.unsafe.Platform
-      private val row =
-        new org.apache.spark.sql.catalyst.expressions.UnsafeRow(numFields)
+      private val row = new UnsafeRow(numFields)
       private var i = 0
       def hasNext: Boolean = i < a.count
       def next(): org.apache.spark.sql.catalyst.InternalRow = {
@@ -534,14 +592,14 @@ object Datalog {
             // evaluation still reads plain DataFrames.
             import org.apache.spark.rdd.RDD
             import org.apache.spark.sql.catalyst.InternalRow
-            import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow}
+            import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
             import org.apache.spark.sql.graftbridge.ColumnBridge
             import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructType}
-            // Per-partition state: a sorted byte ARENA (see Arena above)
-            // for set-semantics heads; (sorted key arena, matching full-
-            // row arena) for folded heads. The round merge is a
-            // sort-merge walk: sort the delta-sized candidates, one
-            // linear walk against the standing arena with bulk
+            // Per-partition state: a sorted key arena plus the row arena
+            // in matching entry order — one arena in both slots for set
+            // heads. Every head kind merges through the one sort-merge
+            // walk (mergeWalk above): sort the delta-sized candidates,
+            // one linear walk against the standing arena with bulk
             // appendRange copies between insertion points, publish a
             // FRESH arena (or the untouched old one when nothing
             // landed). Chosen after measuring three structures on the
@@ -555,11 +613,9 @@ object Datalog {
             // storage pool and serialization-evicted live blocks every
             // round (~100 s/round flat). The arena is accounted at its
             // true byte size, the collector scans 2 objects per slice,
-            // and a spill (if ever) is one bulk write. Retry-safe:
-            // published arenas are never mutated, so a task retry or
-            // speculative re-run replays against the untouched base and
-            // emits the same novel facts.
-            type Pair = (AnyRef, Arena) // (state, the round's novel rows)
+            // and a spill (if ever) is one bulk write.
+            type State = (Arena, Arena) // (sorted keys, rows)
+            type Pair = (State, Arena)  // (state, the round's novel rows)
             case class Sol(pair: RDD[Pair], schema: StructType)
             var sol = Map.empty[String, Sol]
             var delta = Map.empty[String, DataFrame]
@@ -567,222 +623,79 @@ object Datalog {
             def ordinal(cols: Array[String]): Seq[String] =
               cols.sortBy(_.drop(2).toInt).toSeq // _p0.._pN by position
 
-            // one streaming pass per task: dedup within the candidates,
-            // novelty-filter (set) / improvement-filter (fold) against
-            // the prior state, merge — the clone shares the fact
-            // objects, so retained heap stays one copy of the relation
-            // plus two transient tables
+            // one streaming pass per task: gather the partition's
+            // candidates, then dedup, novelty/improvement check and merge
+            // in the one walk
             def mergeInto(cand: DataFrame, prev: Option[Sol], k: String): Sol = {
               val schema = prev.map(_.schema).getOrElse(
                 StructType(cand.schema.fields.map(_.copy(nullable = true))))
               val cols = ordinal(cand.columns)
-              val absorb: (Iterator[InternalRow], AnyRef) => Iterator[Pair] =
-                foldSpec.get(k) match {
-                  case None =>
-                    (cIt, base0) => {
-                      val old = base0.asInstanceOf[Arena]
-                      val buf =
-                        scala.collection.mutable.ArrayBuffer.empty[UnsafeRow]
-                      cIt.foreach(ir => // exchange iterators reuse buffers
-                        buf += ir.asInstanceOf[UnsafeRow].copy())
-                      if (buf.isEmpty) Iterator((old, Arena.empty))
-                      else {
-                        val cand = buf.toArray
-                        java.util.Arrays.sort(cand,
-                          ((a, b) => compareRows(a, b)):
-                            java.util.Comparator[UnsafeRow])
-                        val sol = new ArenaBuilder(
-                          old.bytes.length + 32 * cand.length,
-                          old.count + cand.length)
-                        val nov = new ArenaBuilder(1024, 64)
-                        var i = 0; var lo = 0; var j = 0
-                        while (j < cand.length) {
-                          val c = cand(j)
-                          // sorted candidates: duplicates are adjacent
-                          if (j > 0 && compareRows(c, cand(j - 1)) == 0) j += 1
-                          else {
-                            var cmp = 1
-                            while (i < old.count &&
-                                   { cmp = compareEntry(old, i, c); cmp < 0 })
-                              i += 1
-                            sol.appendRange(old, lo, i) // kept stretch, one memcpy
-                            if (i < old.count && cmp == 0) {
-                              sol.appendRange(old, i, i + 1); i += 1 // known fact
-                            } else { sol.appendRow(c); nov.appendRow(c) }
-                            lo = i
-                            j += 1
-                          }
-                        }
-                        sol.appendRange(old, lo, old.count)
-                        val novA = nov.result()
-                        if (novA.count == 0) Iterator((old, novA))
-                        else Iterator((sol.result(), novA))
-                      }
+              val types = schema.fields.map(_.dataType)
+              val nf = schema.size
+              val fold = foldSpec.get(k)
+              val vi = fold.fold(-1)(_.at)
+              val keyIdx = cols.indices.filterNot(_ == vi)
+              // what a key match stores; null keeps the old row
+              val combine: (UnsafeRow, UnsafeRow) => UnsafeRow = fold match {
+                case None => (_, _) => null // set head: a known fact
+                case Some(f) if f.op == "sum" =>
+                  // counting/bag: candidates are the round's per-key
+                  // CONTRIBUTIONS (reduceFold pre-summed); a known key
+                  // accumulates by addition, and the walk's novel row is
+                  // the contribution, so the next round propagates
+                  // increments, not totals
+                  types(vi) match {
+                    case LongType => (o, c) => {
+                      val acc = o.copy() // fresh bytes, safe to mutate
+                      acc.setLong(vi, o.getLong(vi) + c.getLong(vi)); acc
                     }
-                  case Some(f) if f.op == "sum" =>
-                    // counting/bag walk: candidates are the round's
-                    // per-key CONTRIBUTIONS (reduceFold pre-summed);
-                    // existing keys accumulate by addition, the novel
-                    // arena carries the contribution rows themselves so
-                    // the next round propagates increments, not totals
-                    val vi = f.at
-                    val keyIdx = cols.indices.filterNot(_ == vi).toArray
-                    val types = schema.fields.map(_.dataType)
-                    val isLong = types(vi) match {
-                      case LongType    => true
-                      case IntegerType => false
+                    case IntegerType => (o, c) => {
+                      val acc = o.copy()
+                      acc.setInt(vi, o.getInt(vi) + c.getInt(vi)); acc
+                    }
+                    case other => throw new IllegalArgumentException(
+                      s"$k: sum-fold value type $other (long/int only — " +
+                        "cross-engine sum exactness)")
+                  }
+                case Some(f) =>
+                  val isMin = f.op == "min"
+                  val better: (UnsafeRow, UnsafeRow) => Boolean =
+                    types(vi) match {
+                      case LongType =>
+                        if (isMin) (a, b) => a.getLong(vi) < b.getLong(vi)
+                        else (a, b) => a.getLong(vi) > b.getLong(vi)
+                      case IntegerType =>
+                        if (isMin) (a, b) => a.getInt(vi) < b.getInt(vi)
+                        else (a, b) => a.getInt(vi) > b.getInt(vi)
+                      case DoubleType =>
+                        if (isMin) (a, b) => a.getDouble(vi) < b.getDouble(vi)
+                        else (a, b) => a.getDouble(vi) > b.getDouble(vi)
                       case other => throw new IllegalArgumentException(
-                        s"$k: sum-fold value type $other (long/int only — " +
-                          "cross-engine sum exactness)")
+                        s"$k: fold value type $other (long/int/double only)")
                     }
-                    val nf = schema.size
-                    (cIt, base0) => {
-                      val (okeys, orows) = base0.asInstanceOf[(Arena, Arena)]
-                      val proj = UnsafeProjection.create(keyIdx.toIndexedSeq
-                        .map(i => BoundReference(i, types(i), nullable = true)))
-                      val buf = scala.collection.mutable.ArrayBuffer
-                        .empty[(UnsafeRow, UnsafeRow)]
-                      cIt.foreach { ir =>
-                        val u = ir.asInstanceOf[UnsafeRow]
-                        if (!u.isNullAt(vi))
-                          buf += ((proj(u).copy(), u.copy()))
-                      }
-                      if (buf.isEmpty) Iterator(((okeys, orows), Arena.empty))
-                      else {
-                        val cand = buf.toArray
-                        java.util.Arrays.sort(cand,
-                          ((p, q) => compareRows(p._1, q._1)):
-                            java.util.Comparator[(UnsafeRow, UnsafeRow)])
-                        val mk = new ArenaBuilder(
-                          okeys.bytes.length + 24 * cand.length,
-                          okeys.count + cand.length)
-                        val mr = new ArenaBuilder(
-                          orows.bytes.length + 32 * cand.length,
-                          okeys.count + cand.length)
-                        val nov = new ArenaBuilder(1024, 64)
-                        val cursor =
-                          new org.apache.spark.sql.catalyst.expressions.UnsafeRow(nf)
-                        var i = 0; var lo = 0; var j = 0
-                        while (j < cand.length) {
-                          val (k2, r2) = cand(j)
-                          var cmp = 1
-                          while (i < okeys.count &&
-                                 { cmp = compareEntry(okeys, i, k2); cmp < 0 })
-                            i += 1
-                          mk.appendRange(okeys, lo, i)
-                          mr.appendRange(orows, lo, i)
-                          if (i < okeys.count && cmp == 0) {
-                            cursor.pointTo(orows.bytes,
-                              org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET
-                                + orows.offs(i), orows.len(i))
-                            val acc = cursor.copy() // fresh bytes, safe to mutate
-                            if (isLong) acc.setLong(vi,
-                              acc.getLong(vi) + r2.getLong(vi))
-                            else acc.setInt(vi, acc.getInt(vi) + r2.getInt(vi))
-                            mk.appendRange(okeys, i, i + 1)
-                            mr.appendRow(acc)
-                            i += 1
-                          } else {
-                            mk.appendRow(k2); mr.appendRow(r2)
-                          }
-                          nov.appendRow(r2) // the contribution, always novel
-                          lo = i
-                          j += 1
-                        }
-                        mk.appendRange(okeys, lo, okeys.count)
-                        mr.appendRange(orows, lo, orows.count)
-                        Iterator(((mk.result(), mr.result()), nov.result()))
-                      }
-                    }
-                  case Some(f) =>
-                    val vi = f.at
-                    val isMin = f.op == "min"
-                    val keyIdx = cols.indices.filterNot(_ == vi).toArray
-                    val types = schema.fields.map(_.dataType)
-                    val better: (UnsafeRow, UnsafeRow) => Boolean =
-                      types(vi) match {
-                        case LongType =>
-                          if (isMin) (a, b) => a.getLong(vi) < b.getLong(vi)
-                          else (a, b) => a.getLong(vi) > b.getLong(vi)
-                        case IntegerType =>
-                          if (isMin) (a, b) => a.getInt(vi) < b.getInt(vi)
-                          else (a, b) => a.getInt(vi) > b.getInt(vi)
-                        case DoubleType =>
-                          if (isMin) (a, b) => a.getDouble(vi) < b.getDouble(vi)
-                          else (a, b) => a.getDouble(vi) > b.getDouble(vi)
-                        case other => throw new IllegalArgumentException(
-                          s"$k: fold value type $other (long/int/double only)")
-                      }
-                    val nf = schema.size
-                    (cIt, base0) => {
-                      // state: (key arena sorted by compareRows, full-row
-                      // arena in matching entry order). reduceFold
-                      // guarantees one candidate per key per round, so
-                      // the walk needs no intra-candidate dedup — only
-                      // the improvement check.
-                      val (okeys, orows) = base0.asInstanceOf[(Arena, Arena)]
-                      val proj = UnsafeProjection.create(keyIdx.toIndexedSeq
-                        .map(i => BoundReference(i, types(i), nullable = true)))
-                      val buf = scala.collection.mutable.ArrayBuffer
-                        .empty[(UnsafeRow, UnsafeRow)]
-                      cIt.foreach { ir =>
-                        val u = ir.asInstanceOf[UnsafeRow]
-                        if (!u.isNullAt(vi)) // SQL agg semantics: nulls fold away
-                          buf += ((proj(u).copy(), u.copy()))
-                      }
-                      if (buf.isEmpty) Iterator(((okeys, orows), Arena.empty))
-                      else {
-                        val cand = buf.toArray
-                        java.util.Arrays.sort(cand,
-                          ((p, q) => compareRows(p._1, q._1)):
-                            java.util.Comparator[(UnsafeRow, UnsafeRow)])
-                        val mk = new ArenaBuilder(
-                          okeys.bytes.length + 24 * cand.length,
-                          okeys.count + cand.length)
-                        val mr = new ArenaBuilder(
-                          orows.bytes.length + 32 * cand.length,
-                          okeys.count + cand.length)
-                        val nov = new ArenaBuilder(1024, 64)
-                        val cursor =
-                          new org.apache.spark.sql.catalyst.expressions.UnsafeRow(nf)
-                        var i = 0; var lo = 0; var j = 0
-                        while (j < cand.length) {
-                          val (k2, r2) = cand(j)
-                          var cmp = 1
-                          while (i < okeys.count &&
-                                 { cmp = compareEntry(okeys, i, k2); cmp < 0 })
-                            i += 1
-                          mk.appendRange(okeys, lo, i)
-                          mr.appendRange(orows, lo, i)
-                          if (i < okeys.count && cmp == 0) {
-                            cursor.pointTo(orows.bytes,
-                              org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET
-                                + orows.offs(i), orows.len(i))
-                            if (better(r2, cursor)) {
-                              mk.appendRow(k2); mr.appendRow(r2); nov.appendRow(r2)
-                            } else {
-                              mk.appendRange(okeys, i, i + 1)
-                              mr.appendRange(orows, i, i + 1)
-                            }
-                            i += 1
-                          } else {
-                            mk.appendRow(k2); mr.appendRow(r2); nov.appendRow(r2)
-                          }
-                          lo = i
-                          j += 1
-                        }
-                        mk.appendRange(okeys, lo, okeys.count)
-                        mr.appendRange(orows, lo, orows.count)
-                        val novA = nov.result()
-                        if (novA.count == 0) Iterator(((okeys, orows), novA))
-                        else Iterator(((mk.result(), mr.result()), novA))
-                      }
-                    }
-                }
-              val emptyState: () => AnyRef = foldSpec.get(k) match {
-                case None    => () => Arena.empty
-                case Some(_) => () => (Arena.empty, Arena.empty)
+                  (o, c) => if (better(c, o)) c else null
               }
+              val absorb = (cIt: Iterator[InternalRow], old: State) => {
+                // a folded head is keyed by the row minus its value column
+                val keyOf: UnsafeRow => UnsafeRow =
+                  if (fold.isEmpty) u => u
+                  else {
+                    val proj = UnsafeProjection.create(keyIdx
+                      .map(i => BoundReference(i, types(i), nullable = true)))
+                    u => proj(u).copy()
+                  }
+                val buf = scala.collection.mutable.ArrayBuffer
+                  .empty[(UnsafeRow, UnsafeRow)]
+                cIt.foreach { ir =>
+                  val u = ir.asInstanceOf[UnsafeRow]
+                  if (vi < 0 || !u.isNullAt(vi)) { // SQL agg: nulls fold away
+                    val r = u.copy() // exchange iterators reuse buffers
+                    buf += ((keyOf(r), r))
+                  }
+                }
+                Iterator(mergeWalk(old, fold.nonEmpty, buf.toArray, nf, combine))
+              }
+              val empty: State = (Arena.empty, Arena.empty)
               // layout: folded heads pre-reduce per key (one min/max per
               // key per round reaches the merge) and the groupBy's own
               // exchange IS the hash(keys, n) layout; set heads lay out
@@ -794,7 +707,7 @@ object Datalog {
               // need no projection: reduceFold's groupBy normalizes its
               // grouping keys (NormalizeFloatingNumbers) and the value
               // column is compared numerically, not byte-wise.
-              val laidOut = foldSpec.get(k) match {
+              val laidOut = fold match {
                 case Some(f) => reduceFold(cand, f)
                 case None =>
                   import org.apache.spark.sql.types.FloatType
@@ -830,11 +743,11 @@ object Datalog {
                 case Some(p) =>
                   candRdd.zipPartitions(p.pair.map(_._1),
                     preservesPartitioning = true) { (cIt, sIt) =>
-                    absorb(cIt, if (sIt.hasNext) sIt.next() else emptyState())
+                    absorb(cIt, if (sIt.hasNext) sIt.next() else empty)
                   }
                 case None =>
                   candRdd.mapPartitions(
-                    cIt => absorb(cIt, emptyState()),
+                    cIt => absorb(cIt, empty),
                     preservesPartitioning = true)
               }
               pair.localCheckpoint() // lineage cut at the cached blocks
@@ -875,26 +788,14 @@ object Datalog {
                 case None    => cols
               }
             }
-            def bridge(k: String, s: Sol,
-                       rows: RDD[InternalRow]): DataFrame =
-              ColumnBridge.internalFrame(spark, rows, s.schema,
-                hashCols(k, s.schema), n)
-            def deltaFrame(k: String, s: Sol): DataFrame = {
+            // one arena of each partition's pair as a frame: the rows of
+            // the state (full) or the round's novel rows (delta)
+            def frame(k: String, s: Sol, arena: Pair => Arena): DataFrame = {
               val nf = s.schema.size
-              bridge(k, s, s.pair.mapPartitions(it =>
+              ColumnBridge.internalFrame(spark, s.pair.mapPartitions(it =>
                 if (!it.hasNext) Iterator.empty
-                else arenaRows(it.next()._2, nf),
-                preservesPartitioning = true))
-            }
-            def fullFrame(k: String, s: Sol): DataFrame = {
-              val nf = s.schema.size
-              bridge(k, s, s.pair.mapPartitions({ it =>
-                if (!it.hasNext) Iterator.empty
-                else it.next()._1 match {
-                  case a: Arena            => arenaRows(a, nf)
-                  case (_: Arena, r: Arena) => arenaRows(r, nf)
-                }
-              }, preservesPartitioning = true))
+                else arenaRows(arena(it.next()), nf),
+                preservesPartitioning = true), s.schema, hashCols(k, s.schema), n)
             }
             // Prior pairs replaced mid-round are dropped only once EVERY
             // head of the round has materialized: sibling heads' round
@@ -909,7 +810,7 @@ object Datalog {
               staleDrops.foreach(_.unpersist(false))
               staleDrops.clear()
             }
-            def absorbHead(k: String, fs: Seq[DataFrame]): Long = {
+            def absorbHead(k: String, fs: Seq[DataFrame]): Unit = {
               val merged = fs.reduceLeft(_.unionByName(_))
               val prev = sol.get(k)
               val s1 = mergeInto(merged, prev, k)
@@ -923,17 +824,15 @@ object Datalog {
                 // may still read it — defer to the round boundary
                 prev.foreach(p => staleDrops += p.pair)
                 sol = sol.updated(k, s1)
-                full = full.updated(k, fullFrame(k, s1))
+                full = full.updated(k, frame(k, s1, _._1._2))
                 delta = delta.updated(k,
-                  maybeBroadcast(deltaFrame(k, s1), novBytes))
+                  maybeBroadcast(frame(k, s1, _._2), novBytes))
               }
-              nNew
             }
 
             seeds.foreach { case (k, fs) => absorbHead(k, fs) }
             dropStale()
             var changed = delta.nonEmpty
-            val trace = sys.env.contains("GRAFT_DL_TRACE")
             var round = 0
             // a cycle reaching a counted region has no finite path
             // count — the sum semiring has no fixpoint, so failing loud
@@ -947,7 +846,6 @@ object Datalog {
                 s"sum-fold stratum did not converge in $maxRounds rounds — " +
                   "cyclic input reaching a counted head (path count is " +
                   "infinite there); counting requires a DAG")
-              val t0 = System.nanoTime()
               val avail = rels ++ full
               // RAW firings per head; dedup + novelty ONCE per head
               var raw = Map.empty[String, Seq[DataFrame]]
@@ -969,17 +867,13 @@ object Datalog {
               // after this loop, delta holds EXACTLY the heads that
               // gained facts this round: fired heads are set/removed by
               // absorbHead, last round's unfired heads are consumed
-              var totalNew = 0L
               (raw.keySet ++ delta.keySet).foreach { k =>
                 raw.get(k) match {
-                  case Some(fs) => totalNew += absorbHead(k, fs)
+                  case Some(fs) => absorbHead(k, fs)
                   case None     => delta = delta.removed(k)
                 }
               }
               dropStale() // every head materialized — old pairs now dead
-              if (trace) System.err.println(
-                f"[datalog] round $round%2d: delta=$totalNew " +
-                  f"${(System.nanoTime() - t0) / 1e9}%.2f s")
               changed = delta.nonEmpty
             }
           }

@@ -15,6 +15,12 @@ class LogStoreSpec extends AnyFunSuite with JobStoreBehaviors {
     s
   }
 
+  override def durableStore(): Option[(JobStore, () => JobStore)] = {
+    val dir = java.nio.file.Files.createTempDirectory("logstore").toString
+    val s = new LogBackedJobStore(dir); s.install()
+    Some((s, () => { s.close(); val r = new LogBackedJobStore(dir); r.install(); r }))
+  }
+
   storeProtocol()
 
   test("reopening the log replays to the identical store state") {

@@ -19,6 +19,12 @@ class SharedLogStoreSpec extends AnyFunSuite with JobStoreBehaviors {
     s
   }
 
+  override def durableStore(): Option[(JobStore, () => JobStore)] = {
+    val dir = freshDir()
+    val s = new SharedLogJobStore(dir); s.install()
+    Some((s, () => { s.close(); val r = new SharedLogJobStore(dir); r.install(); r }))
+  }
+
   storeProtocol()
 
   test("two instances over one directory see each other's transitions") {

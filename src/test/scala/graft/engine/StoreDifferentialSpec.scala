@@ -22,9 +22,9 @@ import scala.util.Random
   * backends' non-durable escape hatch), so only the histories that never
   * call it, every even-numbered one, are replayed.
   *
-  * Graphs are transacted all-new or all-duplicate: on a partly duplicate
-  * graph the backends differ (JDBC rolls the whole graph back, the others
-  * insert its new jobs), an open item in ROADMAP.md.
+  * Graphs are transacted all-new, all-duplicate or partly duplicate (new
+  * jobs plus one existing job they depend on), which every backend must
+  * swallow whole.
   */
 class StoreDifferentialSpec extends AnyFunSuite {
   import StoreDifferentialSpec._
@@ -150,13 +150,20 @@ object StoreDifferentialSpec {
     val steps = (1 to Steps).map { _ =>
       rnd.nextInt(if (durable) 17 else 20) match {
         case 0 => Install
-        case 1 if rnd.nextBoolean() => // all duplicate: swallowed, never upserted
-          Transact(g0.copy(jobs = g0.jobs.map(_.copy(args = Some("""{"k":1}""")))))
-        case 1 =>
-          graphs += 1
-          val g = graph(rnd, s"g$graphs", None)
-          known ++= g.jobs.map(_.id)
-          Transact(g)
+        case 1 => rnd.nextInt(3) match {
+          case 0 => // all duplicate: swallowed, never upserted
+            Transact(g0.copy(jobs = g0.jobs.map(_.copy(args = Some("""{"k":1}""")))))
+          case 1 => // partly duplicate: swallowed whole, none of it inserted
+            graphs += 1
+            val g = graph(rnd, s"g$graphs", None)
+            val old = g0.jobs(rnd.nextInt(g0.jobs.size))
+            Transact(JobGraph(g.jobs :+ old, g.deps :+ Dep(g.jobs.head.id, old.id)))
+          case _ =>
+            graphs += 1
+            val g = graph(rnd, s"g$graphs", None)
+            known ++= g.jobs.map(_.id)
+            Transact(g)
+        }
         case 2 | 3 => Info(id())
         case 4 | 5 | 6 => Reserve(id())
         case 7 | 8 | 9 => Finish(id())

@@ -10,6 +10,10 @@ trait JobStoreBehaviors { this: AnyFunSuite =>
 
   def freshStore(): JobStore
 
+  /** For a backend that persists: a fresh store, and a function that
+    * closes it and opens a new store over what it persisted. */
+  def durableStore(): Option[(JobStore, () => JobStore)] = None
+
   def chain(): (JobStore, Map[String, String]) = {
     val s = freshStore()
     val g = JobGraph.jobGraph(Map("j1" -> Seq("j0"), "j2" -> Seq("j1")))
@@ -29,6 +33,20 @@ trait JobStoreBehaviors { this: AnyFunSuite =>
       s.transactGraph(mutated)
       assert(s.snapshotJobs.size == 2)
       assert(s.snapshotJobs.forall(_.args.contains("""{"v":1}""")))
+    }
+
+    test("transact-graph is all or nothing: a graph naming an existing id inserts none of its jobs or deps (jdbc.clj:169-185)") {
+      val durable = durableStore()
+      val s = durable.fold(freshStore())(_._1)
+      s.transactGraph(JobGraph.simpleGraph(Job("a", "t")))
+      s.transactGraph(JobGraph(Seq(Job("a", "t"), Job("b", "t")), Seq(Dep("b", "a"))))
+      s.transactGraph(JobGraph.simpleGraph(Job("c", "t"))) // the store goes on after it
+      def holds(st: JobStore): Unit = {
+        assert(st.snapshotJobs.map(_.id).toSet == Set("a", "c"))
+        assert(st.snapshotDeps.isEmpty)
+      }
+      holds(s)
+      durable.foreach { case (_, reopen) => holds(reopen()) }
     }
 
     test("job-info roundtrips args (store_test.clj:42-52)") {

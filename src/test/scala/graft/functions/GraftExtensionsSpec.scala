@@ -32,7 +32,7 @@ class GraftExtensionsSpec extends SparkTestBase {
 
   test("the full SQL surface is reachable from pure SQL and matches the Column API") {
     import org.apache.spark.sql.functions._
-    VectorFunctions.registerSql(spark)
+    GraftExtensions.registerSql(spark)
     graft.ops.Tables(spark, sfDir).documents
       .select(col("doc_id"), col("text"))
       .limit(50).createOrReplaceTempView("docs_sql")

@@ -66,7 +66,7 @@ class HilbertIndexSpec extends SparkTestBase {
       .select(LayoutFunctions.hilbert_index(col("l_partkey"), col("l_suppkey")).as("h"))
       .distinct().count()
     assert(dn == n, s"hilbert_index collided: $n pairs -> $dn indexes")
-    VectorFunctions.registerSql(spark)
+    GraftExtensions.registerSql(spark)
     val viaSql = spark.sql("SELECT hilbert_index(40000L, 123L) AS h")
       .collect().head.getLong(0)
     assert(viaSql == xy2d(40000L, 123L))

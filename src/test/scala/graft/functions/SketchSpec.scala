@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 class SketchSpec extends SparkTestBase {
 
   test("cms_estimate: exact on skewed small data, null-safe, codegen path") {
-    SketchFunctions.registerSql(spark)
+    GraftExtensions.registerSql(spark)
     import spark.implicits._
     // 60 'a', 30 'b', 10 'c' — far apart, so CMS at eps=0.01 is exact here
     val df = ((1 to 60).map(_ => "a") ++ (1 to 30).map(_ => "b") ++
@@ -34,7 +34,7 @@ class SketchSpec extends SparkTestBase {
   }
 
   test("cms_estimate property: never underestimates, respects eps*N, 30 random multisets") {
-    SketchFunctions.registerSql(spark)
+    GraftExtensions.registerSql(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(42)
     (1 to 30).foreach { trial =>
@@ -89,7 +89,7 @@ class SketchSpec extends SparkTestBase {
   }
 
   test("bloom prefilter prunes: survivors between exact matches and total") {
-    SketchFunctions.registerSql(spark)
+    GraftExtensions.registerSql(spark)
     val t = graft.ops.Tables(spark, sfDir)
     t.orders.createOrReplaceTempView("bp_orders")
     t.lineitem.createOrReplaceTempView("bp_lineitem")

@@ -32,7 +32,7 @@ class VectorDotSpec extends SparkTestBase {
   }
 
   test("vector_dot is SQL-callable after registerSql") {
-    VectorFunctions.registerSql(spark)
+    GraftExtensions.registerSql(spark)
     Tables(spark, sfDir).embeddings.limit(5).createOrReplaceTempView("emb_sql")
     val rows = spark.sql(
       "SELECT vec_id, vector_dot(embedding, embedding) AS d, vector_cosine(embedding, embedding) AS c FROM emb_sql")

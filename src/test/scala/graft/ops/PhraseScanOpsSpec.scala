@@ -76,7 +76,7 @@ class PhraseScanOpsSpec extends SparkTestBase {
   }
 
   test("multi_contains is callable from pure SQL via the extension") {
-    graft.functions.VectorFunctions.registerSql(spark)
+    graft.functions.GraftExtensions.registerSql(spark)
     val df = spark.sql(
       """SELECT multi_contains('a hash join and merge sort',
         |  array('hash join', 'merge sort', 'slow query')) AS m""".stripMargin)

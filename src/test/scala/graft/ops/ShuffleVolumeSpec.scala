@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.SparkTestBase
-import graft.functions.SketchFunctions
+import graft.functions.GraftExtensions
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
 /** Measured — not argued — scale evidence: the bloom prefilter must cut
@@ -31,7 +31,7 @@ class ShuffleVolumeSpec extends SparkTestBase {
   }
 
   test("bloom prefilter cuts the semi join's shuffled row count") {
-    SketchFunctions.registerSql(spark)
+    GraftExtensions.registerSql(spark)
     val dir = "/root/testdata/sf0.01"
     val t = Tables(spark, dir)
     t.orders.createOrReplaceTempView("sv_orders")

@@ -30,7 +30,7 @@ class SqlSurfaceSpec extends SparkTestBase {
   }
 
   test("custom expressions are callable from SQL after extension registration") {
-    graft.functions.VectorFunctions.registerSql(spark)
+    graft.functions.GraftExtensions.registerSql(spark)
     Tables(spark, sfDir).embeddings.createOrReplaceTempView("emb")
     val rows = spark.sql("""
       SELECT a.vec_id AS ia, b.vec_id AS ib, vector_cosine(a.embedding, b.embedding) AS cos

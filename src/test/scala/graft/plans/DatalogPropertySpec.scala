@@ -249,6 +249,59 @@ class DatalogPropertySpec extends SparkTestBase {
     }
   }
 
+  test("property: a set head and a DOUBLE min-fold head, mutually recursive in one stratum, == naive on 20 random positive-weight DAGs") {
+    import spark.implicits._
+    val rnd = new Random(17)
+    (1 to 20).foreach { i =>
+      val nNodes = 3 + rnd.nextInt(10)
+      val edges = (for {
+        a <- 0 until nNodes; b <- (a + 1) until nNodes
+        if rnd.nextInt(3) == 0
+      } yield (a.toLong, b.toLong, 0.05 + rnd.nextDouble() * 9)).toVector
+      val srcs = (0 until 1 + rnd.nextInt(2))
+        .map(_ => rnd.nextInt(nNodes).toLong).distinct
+      // naive simultaneous fixpoint: reach = nodes one or more edges from
+      // a reached-by-dist node; dist relaxes only INTO reached nodes
+      var reach = Set.empty[Long]
+      var dist = srcs.map(_ -> 0.0).toMap
+      var changed = true
+      while (changed) {
+        changed = false
+        edges.foreach { case (a, b, w) =>
+          dist.get(a).foreach { da =>
+            if (!reach(b)) { reach += b; changed = true }
+            val nd = da + w
+            if (dist.get(b).forall(_ > nd)) { dist += (b -> nd); changed = true }
+          }
+        }
+      }
+      val program = Program(Seq(
+        Rule(Atom("dist", Seq(V("n"), V("d"))),
+          Seq(Atom("s", Seq(V("n"), V("d")))),
+          fold = Some(Fold("min", 1))),
+        Rule(Atom("dist", Seq(V("y"), V("nd"))),
+          Seq(Atom("dist", Seq(V("x"), V("d"))),
+            Atom("e", Seq(V("x"), V("y"), V("w"))),
+            Atom("reach", Seq(V("y")))),
+          lets = Seq(Let("nd", "d + w")),
+          fold = Some(Fold("min", 1))),
+        Rule(Atom("reach", Seq(V("y"))),
+          Seq(Atom("dist", Seq(V("x"), V("d"))),
+            Atom("e", Seq(V("x"), V("y"), V("w")))))))
+      assert(program.strata == Map("dist" -> 0, "reach" -> 0))
+      val frames = Map(
+        "e" -> (if (edges.nonEmpty) edges.toDF("a", "b", "w")
+                else Seq.empty[(Long, Long, Double)].toDF("a", "b", "w")),
+        "s" -> srcs.map(n => (n, 0.0)).toDF("n", "d"))
+      val gotDist = program.run(frames, "dist").collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val gotReach = program.run(frames, "reach").collect().map(_.getLong(0)).toSet
+      assert(gotDist == dist && gotReach == reach,
+        s"case $i: engine=($gotDist, $gotReach) naive=($dist, $reach) " +
+          s"edges=$edges srcs=$srcs")
+    }
+  }
+
   test("property: sum-fold counting == naive topological DP on 20 random DAGs") {
     import spark.implicits._
     val rnd = new Random(29)
