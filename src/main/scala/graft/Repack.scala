@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
 
 /** Re-layout generated parquet dirs for scan parallelism.
   *
@@ -28,11 +27,8 @@ object Repack {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: Repack <dataDir> [<dataDir>...]")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions
+      .local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Build a larger scale factor from the driver-generated testdata by
@@ -56,11 +56,8 @@ object ScaleGen {
   def main(args: Array[String]): Unit = {
     val Array(src, out, copiesStr) = args.take(3)
     val copies = copiesStr.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions
+      .local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def write(df: DataFrame, name: String): Unit = {

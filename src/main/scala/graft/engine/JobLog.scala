@@ -56,8 +56,11 @@ private[engine] object JobLog {
     op match {
       case "transact" =>
         val jobs = extract(line, "jobs").get.split(RS).filter(_.nonEmpty).map { rec =>
-          val parts = rec.split(US).padTo(3, "")
-          Job(parts(0), parts(1), args = if (parts(2).isEmpty) None else Some(parts(2)))
+          val p = rec.split(US.toString, -1).padTo(3, "")
+          Job(p(0), p(1), args = Some(p(2)).filter(_.nonEmpty),
+            status = p.lift(3).getOrElse(JobStatus.Unstarted),
+            heartbeat = p.lift(4).filter(_.nonEmpty).map(_.toLong),
+            failure = p.lift(5))
         }
         val deps = extract(line, "deps").get.split(RS).filter(_.nonEmpty).map { rec =>
           val parts = rec.split(US)
@@ -95,12 +98,21 @@ private[engine] abstract class LogJobStore extends JobStore {
   /** Run `read` against a snapshot that includes every persisted line. */
   protected def current[A](read: => A): A
 
+  /** id, type and args of a job; then status and heartbeat, and the
+    * failure if any, only for a job that is not plain unstarted (lines
+    * written before these trailing fields existed replay as unstarted). */
+  private def record(j: Job): String = {
+    val state =
+      if (j.status == JobStatus.Unstarted && j.heartbeat.isEmpty && j.failure.isEmpty) Nil
+      else Seq(j.status, j.heartbeat.fold("")(_.toString)) ++ j.failure
+    (Seq(j.id, j.jobType, j.args.getOrElse("")) ++ state).mkString(US.toString)
+  }
+
   override def transactGraph(g: JobGraph): JobGraph = logged {
     val inserts = g.jobs.nonEmpty && g.jobs.forall(j => inner.jobInfo(j.id).isEmpty)
     inner.transactGraph(g)
     val line = if (!inserts) None else Some(encode("transact",
-      "jobs" -> g.jobs.map(j => s"${j.id}$US${j.jobType}$US${j.args.getOrElse("")}")
-        .mkString(RS.toString),
+      "jobs" -> g.jobs.map(record).mkString(RS.toString),
       "deps" -> g.deps.map(d => s"${d.jobId}$US${d.depId}").mkString(RS.toString)))
     (g, line)
   }

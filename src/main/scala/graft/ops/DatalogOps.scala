@@ -135,59 +135,24 @@ object DatalogOps {
           - (SELECT COUNT(*) FROM ready) AS BIGINT) AS n_blocked_unstarted,
         CAST((SELECT SUM(j) FROM ready) AS BIGINT) AS ready_key_sum"""))
 
-  /** q555's weighted SSSP re-expressed as a datalog Program with a
-    * MIN-FOLD head (the r14 semiring-recursion mode): the rule pair
+  /** q555's weighted SSSP under its datalog name: the MIN-FOLD program
     *
     *   dist(n, d)   ← src(n, d)                         [fold min@1]
     *   dist(y, nd)  ← dist(x, d) ∧ edge(x, y, w), nd = d + w
     *
-    * compiles to EXACTLY SsspOps's hand-written loop — per round one
-    * frontier⋈edges equi-join, a per-key min reduce, and an
-    * improvement-only delta against the standing distance map — but
-    * derived from the rule shape by the engine (improvement deltas are
-    * semi-naive evaluation under the min semiring; Ross & Sagiv 1992).
-    * Same fixture, same readout, same oracle as q555: the two must stay
-    * hash-identical, which IS the correctness statement for the mode.
-    *
-    * Scale shape: identical laws to q555 — rounds ∝ DAG depth, per-round
-    * shuffle ∝ improved keys (the min-reduce), the standing map is never
-    * re-shuffled (zipPartitions merge at fixed width), report is the
-    * distance histogram. The EDB carries NO broadcast hint (r15): the
-    * engine knows each round's delta bytes exactly and hints the DELTA
-    * side when it fits the broadcast threshold, so a thin frontier joins
-    * as a broadcast probe with the edges scanned in place — hinting the
-    * hierarchy-sized edge side here instead forced a ~round-count ×
-    * |edges| re-broadcast (the measured r14 3× generality tax vs q555,
-    * whose AQE plan broadcast its small side all along). */
+    * is [[GraphOps.pathFold]], and q555 runs the very same function
+    * ([[SsspOps.ssspHistogram]]) and oracle — one definition, two
+    * registered names. Improvement deltas are semi-naive evaluation under
+    * the min semiring (Ross & Sagiv 1992): per round one frontier⋈edges
+    * equi-join, a per-key min reduce, and an improvement-only merge
+    * against the standing distance map at a fixed width; rounds ∝ DAG
+    * depth, and the report is the distance histogram. The EDB carries NO
+    * broadcast hint (r15): the engine knows each round's delta bytes
+    * exactly and hints the DELTA side when it fits the broadcast
+    * threshold, so a thin frontier joins as a broadcast probe with the
+    * edges scanned in place. */
   val q561DatalogSssp: QueryDef = QueryDef(
-    "q561_datalog_sssp",
-    (s, dir) => {
-      val p = Tables(s, dir).part
-        .select(col("p_partkey").cast("long").as("child"))
-      val edges = p.filter(col("child") > 1)
-        .select(expr("child div 2").as("parent"), col("child"))
-        .union(p.filter(col("child") > 2)
-          .select(expr("child div 3").as("parent"), col("child"))
-          .filter(col("parent") =!= expr("child div 2")))
-        .withColumn("w", lit(1L) + pmod(col("child"), lit(7L)))
-        .localCheckpoint() // relaxed every round
-      val src = s.range(1).select(lit(1L).as("node"), lit(0L).as("d"))
-      val program = Program(Seq(
-        Rule(Atom("dist", Seq(V("n"), V("d"))),
-          Seq(Atom("src", Seq(V("n"), V("d")))),
-          fold = Some(Fold("min", 1))),
-        Rule(Atom("dist", Seq(V("y"), V("nd"))),
-          Seq(Atom("dist", Seq(V("x"), V("d"))),
-            Atom("edge", Seq(V("x"), V("y"), V("w")))),
-          lets = Seq(Let("nd", "d + w")),
-          fold = Some(Fold("min", 1)))))
-      program.run(Map("edge" -> edges, "src" -> src), "dist")
-        .groupBy(col("_p1").as("d"))
-        .agg(count(lit(1)).as("n_nodes"), sum(col("_p0")).as("node_sum"))
-        .orderBy(col("d"))
-    },
-    // the SAME oracle as q555 — the mode's contract is hash-identity
-    SsspOps.q555WeightedSssp.oracle)
+    "q561_datalog_sssp", SsspOps.ssspHistogram, Some(SsspOps.ssspOracle))
 
   /** Path counting via the r15 SUM-FOLD (bag/counting) datalog mode:
     *

@@ -93,19 +93,17 @@ object GraphAnalytics {
     * — the DAG statistic that bounds pipeline makespan (a job at depth d
     * cannot start before d sequential waves). Where q21 computes min-depth
     * (BFS reachability), this is the max-fold: depth(v) = 1 +
-    * max(depth(parents of v)), iterated to fixpoint. Two round-count
-    * levers keep the driver loop off the critical path (a 15-round loop
-    * of two jobs per round was 4.6 s at sf0.1; this shape halves it):
+    * max(depth(parents of v)), the [[GraphOps.pathFold]] program
     *
-    *  - 1..3-hop edge tables (GraphOps' trick widened, correct for max
-    *    as for min: every hop-edge is a real path, and any path
-    *    decomposes into ≤3-hop segments, so rounds = ceil(L/3) and the
-    *    fold never overshoots; table size stays ≤ 3·|closure pairs ≤3
-    *    apart|, built once in one checkpoint job);
-    *  - ONE action per round: the next frame is LAZILY checkpointed and
-    *    materialized by the convergence probe itself — a (Σ depth, n)
-    *    aggregate, which under a monotone max-fold strictly increases
-    *    until, exactly at the fixpoint, it is unchanged.
+    *   depth(n, d)  ← root(n, d)                           [fold max@1]
+    *   depth(c, nd) ← depth(p, d) ∧ hop(p, c, h), nd = d + h
+    *
+    * over 1..3-hop edge tables (GraphOps' trick widened, correct for max
+    * as for min: every hop-edge is a real path, and any path decomposes
+    * into ≤3-hop segments, so rounds = ceil(L/3) and the fold never
+    * overshoots; table size stays ≤ 3·|closure pairs ≤3 apart|, built
+    * once in one checkpoint job). The engine relaxes only the nodes
+    * whose depth grew last round and stops when none did.
     *
     * The oracle enumerates every root path recursively and takes the max
     * — exponentially many paths, affordable only at oracle scale; the
@@ -125,22 +123,10 @@ object GraphAnalytics {
         .map { case (e, i) => e.withColumn("hop", lit((i + 1).toLong)) }
         .reduce(_ union _)
         .localCheckpoint()
-      var depth = s.range(1, 2).select(col("id").as("node"), lit(0L).as("depth"))
-      var fp = (-1L, -1L)
-      var prev = (-2L, -2L)
-      while (fp != prev) {
-        prev = fp
-        val viaAncestor = hops
-          .join(depth.withColumnRenamed("node", "parent"), Seq("parent"))
-          .select(col("child").as("node"), (col("depth") + col("hop")).as("depth"))
-        val next = depth.union(viaAncestor)
-          .groupBy(col("node")).agg(max(col("depth")).as("depth"))
-          .localCheckpoint(eager = false)
-        val probe = next.agg(sum(col("depth")), count(lit(1))).head()
-        fp = (probe.getLong(0), probe.getLong(1))
-        depth = next
-      }
-      depth.filter(col("depth") > 0)
+      val root = s.range(1, 2).select(col("id").as("node"), lit(0L).as("depth"))
+      GraphOps.pathFold("max", root,
+        hops.select(col("parent"), col("child"), col("hop")))
+        .filter(col("depth") > 0)
     },
     Some(s"""WITH RECURSIVE edges AS ($edgesSql),
       d AS (

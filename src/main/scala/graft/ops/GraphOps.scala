@@ -2,35 +2,36 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.plans.Datalog._
 
 /** Iterative graph operators — the reference's transitive-closure BFS
   * (jdbc.clj:101-113, SURVEY.md §2D row 6) generalized to DataFrames.
-  * Catalyst can't express recursion, so the fixpoint loop runs on the
-  * driver; each level is one distributed join, and `localCheckpoint`
-  * truncates lineage so deep graphs don't stack plans.
+  * Catalyst can't express recursion, so every fixpoint here is a
+  * [[graft.plans.Datalog]] min- or max-fold program — [[pathFold]] for
+  * depths and distances, [[connectedComponents]] for min labels — and
+  * the engine owns the rounds, the per-round checkpoint and the
+  * convergence probe.
   *
-  * Two execution modes share one round structure (3-hop frontier
-  * expansion, min-depth fold):
+  * The closure [[descendantsWithDepth]] (3-hop frontier expansion,
+  * min-depth fold) has one more mode in front of the engine:
   *
   *  - DRIVER-FRONTIER: frontier and visited set live on the driver as
   *    local relations; each round is ONE shuffle-free cluster job (hop
   *    table ⋈ broadcast frontier, collect). Fastest when the reachable
   *    set is metadata-scale (job graphs: the frontier was going to be
   *    broadcast anyway, so driver-residency adds no new memory bound).
-  *  - DISTRIBUTED: frontier and visited are DataFrames; each round is a
-  *    shuffle join + min-agg + anti-join, checkpointed. Nothing is ever
-  *    collected, so the reachable set is bounded by cluster storage, not
-  *    driver heap — the mode a DATA-scale graph (q21 over an arbitrary
-  *    edge table) needs.
+  *  - DISTRIBUTED: the min-depth [[pathFold]] over the hop tables.
+  *    Nothing is ever collected, so the reachable set is bounded by
+  *    cluster storage, not driver heap — the mode a DATA-scale graph
+  *    (q21 over an arbitrary edge table) needs.
   *
-  * [[descendantsWithDepth]] starts in driver mode and switches itself to
-  * distributed the moment the tracked node count crosses
-  * `maxDriverNodes` — the collected state it hands over is by
-  * construction no larger than that bound, so the switch happens BEFORE
-  * the driver can be overwhelmed, not after. Large frontiers also get
-  * their candidate set pre-aggregated (min per node) on the cluster, so
-  * a single round's collect is bounded by the new-node count rather than
-  * the raw candidate multiplicity.
+  * The driver mode switches itself to distributed the moment the tracked
+  * node count crosses `maxDriverNodes`, seeding the fold with the rows
+  * it has collected — by construction no more than that bound, so the
+  * switch happens BEFORE the driver can be overwhelmed, not after. Large
+  * frontiers also get their candidate set pre-aggregated (min per node)
+  * on the cluster, so a single round's collect is bounded by the
+  * new-node count rather than the raw candidate multiplicity.
   */
 object GraphOps {
 
@@ -60,7 +61,7 @@ object GraphOps {
     * previous frontier; and no node can be discovered before its window,
     * because that would imply a shorter path than its min depth.
     *
-    * Starts driver-resident and auto-switches to the distributed variant
+    * Starts driver-resident and auto-switches to the distributed fold
     * when visited+frontier exceeds `maxDriverNodes` (see object doc).
     */
   def descendantsWithDepth(
@@ -78,23 +79,22 @@ object GraphOps {
     // a root set already past the driver bound goes straight to distributed
     val rootRows = roots.select(col("node")).limit(maxDriverNodes + 1).collect()
     if (rootRows.length > maxDriverNodes)
-      return descendantsWithDepthDistributed(spark, edgesIn, roots)
+      return closure(edges, roots.select(col("node"), lit(0L).as("depth")))
     val visited = scala.collection.mutable.LinkedHashMap[Any, Long]()
     rootRows.foreach(r => visited(r.get(0)) = 0L)
     var frontier: Seq[org.apache.spark.sql.Row] =
       visited.keysIterator.map(n => org.apache.spark.sql.Row(n, 0L)).toSeq
 
     // every driver-side collect below is CAPPED; hitting a cap hands the
-    // current (≤ maxDriverNodes) state to the distributed loop, which
+    // current (≤ maxDriverNodes) state to the distributed fold, which
     // re-runs the unfinished round — nothing oversized ever lands on the
-    // driver, and the handoff costs one redone round, not redone work
-    def switchToDistributed(): DataFrame = {
-      val visitedDF = spark.createDataFrame(
-        visited.iterator.map { case (n, d) => org.apache.spark.sql.Row(n, d) }.toSeq.asJava,
-        outSchema)
-      val frontierDF = spark.createDataFrame(frontier.asJava, outSchema)
-      closureRounds(spark, edges, visitedDF, frontierDF)
-    }
+    // driver. Every frontier row is already in `visited`, so the visited
+    // rows alone seed the fold; its first round re-expands the inner
+    // nodes too (≤ maxDriverNodes rows) and finds nothing shorter there.
+    def visitedRows: DataFrame = spark.createDataFrame(
+      visited.iterator.map { case (n, d) => org.apache.spark.sql.Row(n, d) }.toSeq.asJava,
+      outSchema)
+    def switchToDistributed(): DataFrame = closure(edges, visitedRows)
     // raw candidate rows tolerated in one collect (~64 MB of pairs);
     // beyond it the round pre-aggregates min-by-node on the cluster
     val rawCap = 4 * 1024 * 1024
@@ -133,79 +133,82 @@ object GraphOps {
       mins.foreach { case (n, d) => visited(n) = d }
       frontier = mins.iterator.map { case (n, d) => org.apache.spark.sql.Row(n, d) }.toSeq
     }
-    spark.createDataFrame(
-      visited.iterator.map { case (n, d) => org.apache.spark.sql.Row(n, d) }.toSeq.asJava,
-      outSchema)
+    visitedRows
   }
 
-  /** Fully distributed closure: same rounds, no driver-side state. Exposed
-    * for callers that KNOW the reachable set is data-scale. */
+  /** Fully distributed closure: the min-depth [[pathFold]] over the hop
+    * tables, seeded with the roots at depth 0. Exposed for callers that
+    * KNOW the reachable set is data-scale. */
   def descendantsWithDepthDistributed(
-      spark: SparkSession, edgesIn: DataFrame, roots: DataFrame): DataFrame = {
-    val seed = roots.select(col("node"), lit(0L).as("depth")).localCheckpoint()
-    closureRounds(spark, hopTables(edgesIn), seed, seed)
+      spark: SparkSession, edgesIn: DataFrame, roots: DataFrame): DataFrame =
+    closure(hopTables(edgesIn), roots.select(col("node"), lit(0L).as("depth")))
+
+  /** (node, depth) seed rows closed over the hop tables by min depth. */
+  private def closure(hops: DataFrame, seed: DataFrame): DataFrame =
+    pathFold("min", seed, hops.select(col("parent"), col("child"), col("hop")))
+
+  /** The one path fold every min/max-depth fixpoint here runs on:
+    *
+    *   dist(n, d)  ← seed(n, d)                             [fold op@1]
+    *   dist(y, nd) ← dist(x, d) ∧ edge(x, y, w), nd = d + w [fold op@1]
+    *
+    * evaluated by [[graft.plans.Datalog]]'s semi-naive fixpoint: only
+    * nodes whose value improved last round relax their out-edges, every
+    * round is checkpointed, and nothing is collected. `op` is "min"
+    * (shortest distance, BFS depth) or "max" (longest path, which needs
+    * an acyclic graph to converge). `seed` is (node, value) and `edges`
+    * (src, dst, weight), positionally; the result carries the seed's
+    * column names, and edge targets are cast to the seed's node type so
+    * every round's rows match the solution set's schema. */
+  def pathFold(op: String, seed: DataFrame, edges: DataFrame): DataFrame = {
+    val fold = Some(Fold(op, 1))
+    val e = edges.toDF("x", "y", "w")
+      .withColumn("y", col("y").cast(seed.schema.head.dataType))
+    Program(Seq(
+      Rule(Atom("dist", Seq(V("n"), V("d"))),
+        Seq(Atom("seed", Seq(V("n"), V("d")))), fold = fold),
+      Rule(Atom("dist", Seq(V("y"), V("nd"))),
+        Seq(Atom("dist", Seq(V("x"), V("d"))),
+          Atom("edge", Seq(V("x"), V("y"), V("w")))),
+        lets = Seq(Let("nd", "d + w")), fold = fold)))
+      .run(Map("seed" -> scattered(seed), "edge" -> e), "dist")
+      .toDF(seed.columns.toSeq: _*)
   }
 
-  /** The distributed rounds: candidates = hop tables ⋈ frontier, min per
-    * node, anti-join visited → next frontier. Every per-round DataFrame is
-    * localCheckpoint()ed — the frontier feeds two consumers, and without
-    * truncation Catalyst's analysis goes exponential in round count. Three
-    * actions per round (checkpoint×2 + isEmpty) instead of driver mode's
-    * one — the price of unbounded reachable sets. */
-  private def closureRounds(
-      spark: SparkSession,
-      edges: DataFrame,
-      visited0: DataFrame,
-      frontier0: DataFrame): DataFrame = {
-    var visited = visited0.localCheckpoint()
-    var frontier = frontier0.localCheckpoint()
-    while (!frontier.isEmpty) {
-      val next = edges
-        .join(frontier, edges("parent") === frontier("node"))
-        .select(edges("child").as("node"), (frontier("depth") + edges("hop")).as("depth"))
-        .groupBy(col("node")).agg(min(col("depth")).as("depth"))
-        .join(visited, Seq("node"), "left_anti")
-        .localCheckpoint()
-      visited = visited.union(next).localCheckpoint()
-      frontier = next
-    }
-    visited
-  }
+  /** A fold's seed in round-robin layout. The engine lays a folded head
+    * out at its own fixed hash width through the fold's groupBy; a seed
+    * already clustered on its key column (a Range over node ids, a hash
+    * layout) would skip that exchange and reach the merge at the wrong
+    * width. */
+  private def scattered(seed: DataFrame): DataFrame =
+    seed.repartition(seed.sparkSession.sparkContext.defaultParallelism)
 
   /** Connected components over an undirected edge set by min-label
-    * propagation: every node starts labeled with its own id; each round a
-    * node takes the min of its label and its neighbors' labels; fixpoint
-    * when no label changes. Converges in O(component diameter) rounds —
-    * for dup-cluster resolution (the intended use, [[Dedup
-    * .q79DupClusters]]) diameters are tiny. Each round is ONE equi-join +
-    * hash agg, shuffling (id, label) longs only; every per-round frame is
-    * localCheckpoint()ed (same Catalyst-growth reason as [[closureRounds]])
-    * and the only driver value is the converged? count. The previous label
-    * rides through the round so convergence is a filter-count on the
-    * already-checkpointed frame — one shuffle job per round, not two (the
-    * old separate next⋈prev convergence join doubled the round cost).
-    * Returns (id, label) with label = min node id in the component. */
+    * propagation, as a min-fold program over the symmetrized edges:
+    *
+    *   cc(x, l) ← node(x, l)              (every node labels itself)
+    *   cc(x, l) ← cc(y, l) ∧ und(y, x)    [fold min@1]
+    *
+    * Semi-naive evaluation moves only the labels that improved last
+    * round, so rounds are O(component diameter) — for dup-cluster
+    * resolution (the intended use, [[Dedup.q79DupClusters]]) diameters
+    * are tiny. Self edges and duplicate edges are harmless; only nodes
+    * that appear in an edge are labeled. Returns (id, label) with
+    * label = min node id in the component. */
   def connectedComponents(spark: SparkSession, edges: DataFrame): DataFrame = {
     val und = edges.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(edges.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .localCheckpoint()
-    var labels = und.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")).localCheckpoint()
-    var changed = 1L
-    while (changed > 0) {
-      val nbrMin = und.join(labels.withColumnRenamed("id", "dst"), Seq("dst"))
-        .select(col("src").as("id"), col("label"))
-        .groupBy(col("id")).agg(min(col("label")).as("nbr"))
-      // left join: isolated self-labeled nodes keep their label; least()
-      // is null-safe on the missing-neighbor side
-      val next = labels.withColumnRenamed("label", "prev")
-        .join(nbrMin, Seq("id"), "left")
-        .select(col("id"), least(col("prev"), col("nbr")).as("label"), col("prev"))
-        .localCheckpoint()
-      changed = next.filter(col("label") =!= col("prev")).count()
-      labels = next.select(col("id"), col("label"))
-    }
-    labels
+      .localCheckpoint() // read by the seed and every round
+    val fold = Some(Fold("min", 1))
+    Program(Seq(
+      Rule(Atom("cc", Seq(V("x"), V("l"))),
+        Seq(Atom("node", Seq(V("x"), V("l")))), fold = fold),
+      Rule(Atom("cc", Seq(V("x"), V("l"))),
+        Seq(Atom("cc", Seq(V("y"), V("l"))), Atom("und", Seq(V("y"), V("x")))),
+        fold = fold)))
+      .run(Map("node" -> scattered(und.select(col("src"), col("src").as("l"))),
+        "und" -> und), "cc")
+      .toDF("id", "label")
   }
 
   /** Transitive closure demo on real data: the implicit binary tree

@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * Scale shape: the corpus collapses to the grid-cell census in one
   * scan (the canonical grid-DBSCAN scale-out: neighborhood queries
   * become cell-key equi-joins, never point-pairs); the connected-
-  * components fixpoint runs on the model-sized core-cell graph with an
-  * exact convergence check per round (the q21 driver-loop discipline).
+  * components fixpoint ([[GraphOps.connectedComponents]], a min-fold
+  * datalog program) runs on the model-sized core-cell graph.
   * The density threshold is data-derived (max(3, ceil(mean occupancy)))
   * so the operator is parameter-stable across scale factors.
   */
@@ -52,20 +52,11 @@ object GridClusterOps {
           col("key").as("dst")), Seq("nx", "ny"))
         .select(col("src"), col("dst"))
         .localCheckpoint()
-      // min-label propagation to fixpoint on the model-sized cell graph
-      var labels = core.select(col("key").as("cell"), col("key").as("lbl"))
-        .localCheckpoint()
-      var changed = 1L
-      while (changed > 0) {
-        val next = adj.join(labels.select(col("cell").as("src"), col("lbl")),
-          Seq("src"))
-          .groupBy(col("dst").as("cell")).agg(min(col("lbl")).as("lbl"))
-          .localCheckpoint()
-        changed = next.join(labels.select(col("cell"), col("lbl").as("old")),
-          Seq("cell"))
-          .where(col("lbl") =!= col("old")).count()
-        labels = next
-      }
+      // min-label components of the model-sized cell graph (every core
+      // cell is its own neighbour, so each one gets a label)
+      val labels = GraphOps.connectedComponents(s,
+        adj.select(col("src").as("id_a"), col("dst").as("id_b")))
+        .select(col("id").as("cell"), col("label").as("lbl"))
       // border: non-core cells adjacent to a core cell adopt the min label
       val nonCore = flagged.where(col("cnt") < col("min_pts"))
       val border = nonCore.crossJoin(broadcast(offs))

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -16,53 +15,31 @@ import org.apache.spark.sql.types.DecimalType
 object IterOps {
 
   /** Semi-naive BFS over the part tree (child → child div 2, the q21
-    * graph), from root 1: delta₀ = {1}; deltaₙ₊₁ = children(deltaₙ)
-    * minus everything visited. Each round joins ONLY the frontier
-    * against the edge table (an equi-join whose left side is the level,
-    * not the closure) and anti-joins the visited set — the semi-naive
-    * optimization that turns O(closure × edges × depth) naive recursion
-    * into O(edges reached) total work; rounds are bounded by the tree
-    * depth (⌈log₂ maxkey⌉). Reports the BFS level profile: depth, level
-    * size, cumulative reached — the oracle recomputes it as min-depth
-    * classes of a recursive CTE. */
+    * graph), from root 1, as the min-depth [[GraphOps.pathFold]] program
+    *
+    *   depth(n, d)  ← root(n, d)                        [fold min@1]
+    *   depth(c, nd) ← depth(p, d) ∧ edge(p, c), nd = d + 1
+    *
+    * followed by a count per depth. [[graft.plans.Datalog]] evaluates it
+    * semi-naively: each round joins ONLY the nodes first reached last
+    * round (the delta) against the edge table and merges the candidates
+    * into the standing depth map — the optimization that turns
+    * O(closure × edges × depth) naive recursion into O(edges reached)
+    * total work; rounds are bounded by the tree depth (⌈log₂ maxkey⌉).
+    * Duplicate part keys fold into one node. Reports the BFS level
+    * profile: depth, level size, cumulative reached — the oracle
+    * recomputes it as min-depth classes of a recursive CTE. */
   val q354SeminaiveClosure: QueryDef = QueryDef(
     "q354_seminaive_closure",
     (s, dir) => {
       val edges = Tables(s, dir).part
         .filter(col("p_partkey") >= 2)
-        .select(col("p_partkey").as("child"),
-          expr("p_partkey div 2").as("parent"))
+        .select(expr("p_partkey div 2").as("parent"),
+          col("p_partkey").as("child"), lit(1L).as("w"))
         .localCheckpoint() // every round probes this one frame
-      var delta = s.range(1).select(lit(1L).as("node")).localCheckpoint()
-      val levels = scala.collection.mutable.ListBuffer[(Int, DataFrame)](0 -> delta)
-      var d = 0
-      var more = true
-      while (more && d < 40) {
-        d += 1
-        // r16: no visited anti-join, no accumulated visited checkpoint.
-        // The edge relation is child → child div 2 with child ≥ 2, so
-        // every step strictly DECREASES the key walking up — a node's
-        // BFS depth is unique for ANY part-key set (each node has exactly
-        // one parent), and a delta can never contain an already-visited
-        // node. The anti-join was structurally a no-op; dropping it
-        // removes one growing-frame materialization + one join per level
-        // (~18 levels at sf0.1). distinct() stays: it is the level-frame
-        // dedup under duplicate part keys.
-        val next = edges.join(delta.select(col("node").as("parent")), Seq("parent"))
-          .select(col("child").as("node")).distinct()
-          .localCheckpoint()
-        // bounded driver-side emptiness probe — the loop-control read the
-        // GraphOps fixpoints already make (depth ≤ log2 of the key space)
-        if (next.isEmpty) more = false
-        else {
-          levels += (d -> next)
-          delta = next
-        }
-      }
-      levels.map { case (depth, df) =>
-        df.agg(count(lit(1)).as("n_nodes")).select(lit(depth.toLong).as("depth"),
-          col("n_nodes"))
-      }.reduce(_.unionByName(_))
+      val root = s.range(1).select(lit(1L).as("node"), lit(0L).as("depth"))
+      GraphOps.pathFold("min", root, edges)
+        .groupBy(col("depth")).agg(count(lit(1)).as("n_nodes"))
         .withColumn("n_cum", sum(col("n_nodes")).over(
           org.apache.spark.sql.expressions.Window.orderBy(col("depth"))
             .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,

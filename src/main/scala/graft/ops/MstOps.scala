@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.DecimalType
   * the algorithm, not just the arithmetic.
   *
   * Scale shape: one corpus scan to the |V|²-bounded edge census;
-  * ⌈log₂ V⌉ rounds of (edges ⋈ comp) + per-component min + hash-min
+  * ⌈log₂ V⌉ rounds of (edges ⋈ comp) + per-component min + min-label
   * contraction — every stage an equi-join or hash-agg on frames no
   * larger than the edge list. The oracle unrolls the 5 rounds a
   * 25-node graph can need, with a recursive-CTE closure per round
@@ -61,34 +61,16 @@ object MstOps {
             .withColumn("round_added", lit(round.toLong))
             .localCheckpoint()
           mst = Some(mst.map(_.unionByName(chosen)).getOrElse(chosen))
-          // contract: hash-min label propagation over the chosen
-          // component-pairs until fixpoint (a pseudo-forest, so the
-          // loop is bounded by the longest merge chain)
+          // contract: min-label components of the chosen component
+          // pairs; a component with no chosen edge keeps its own label
           val cpairs = chosen
-            .join(comp.select(col("node").as("a"), col("c").as("ca")), Seq("a"))
-            .join(comp.select(col("node").as("b"), col("c").as("cb")), Seq("b"))
-            .select(col("ca"), col("cb"))
-          val cedges = cpairs
-            .union(cpairs.select(col("cb").as("ca"), col("ca").as("cb")))
-            .distinct().localCheckpoint()
-          var lbl = comp.select(col("c")).distinct()
-            .withColumn("l", col("c")).localCheckpoint()
-          var changed = 1L
-          while (changed > 0) {
-            val next = lbl
-              .join(cedges.select(col("ca").as("c"), col("cb")), Seq("c"), "left")
-              .join(lbl.select(col("c").as("cb"), col("l").as("ln")),
-                Seq("cb"), "left")
-              .groupBy(col("c"))
-              .agg(least(min(col("l")), coalesce(min(col("ln")),
-                min(col("l")))).as("l"))
-              .localCheckpoint()
-            changed = next.join(lbl.withColumnRenamed("l", "lp"), Seq("c"))
-              .where(col("l") =!= col("lp")).count()
-            lbl = next
-          }
-          comp = comp.join(lbl, Seq("c"))
-            .select(col("node"), col("l").as("c"))
+            .join(comp.select(col("node").as("a"), col("c").as("id_a")), Seq("a"))
+            .join(comp.select(col("node").as("b"), col("c").as("id_b")), Seq("b"))
+            .select(col("id_a"), col("id_b"))
+          val lbl = GraphOps.connectedComponents(s, cpairs)
+          comp = comp.join(lbl.select(col("id").as("c"), col("label")),
+              Seq("c"), "left")
+            .select(col("node"), coalesce(col("label"), col("c")).as("c"))
             .localCheckpoint()
           round += 1
         }

@@ -1,66 +1,53 @@
 package graft.ops
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Weighted single-source shortest paths (Bellman-Ford / delta-stepping
-  * family) over the part hierarchy with per-node entry costs — the
-  * RECURSIVE-AGGREGATION fixpoint the pure datalog surface deliberately
-  * does not express (min inside recursion is not monotone set semantics;
-  * `plans/Datalog.scala` covers the set-semantics closures, this is the
-  * semiring sibling — Flink/Pregel's iterate-with-min). Semi-naive
-  * frontier relaxation: only nodes IMPROVED last round relax their
-  * out-edges, so per-round work ∝ improvements, and a DAG with positive
-  * weights converges in ≤ depth rounds (reference: overseer's DAG
-  * traversal family, jdbc.clj:101-113 is the unweighted cousin).
+/** Weighted single-source shortest paths over the part hierarchy with
+  * per-node entry costs — the RECURSIVE-AGGREGATION fixpoint (min inside
+  * recursion: Flink/Pregel's iterate-with-min), written as the min-fold
+  * [[GraphOps.pathFold]] program
   *
-  * Scale shape: each round is one equi-join frontier⋈edges + per-child
-  * min hash-agg + an improvement anti-check against the standing dist
-  * frame, localCheckpointed (the q21 fixpoint rule); the report is a
-  * distance histogram, never the raw per-node frame.
+  *   dist(n, d)  ← src(n, d)                              [fold min@1]
+  *   dist(y, nd) ← dist(x, d) ∧ edge(x, y, w), nd = d + w
+  *
+  * and evaluated by [[graft.plans.Datalog]]: only nodes IMPROVED last
+  * round relax their out-edges, so per-round work ∝ improvements, and a
+  * DAG with positive weights converges in ≤ depth rounds (reference:
+  * overseer's DAG traversal family, jdbc.clj:101-113 is the unweighted
+  * cousin). q555 and q561 (DatalogOps) are this one function under two
+  * registered names, checked against this one oracle.
+  *
+  * Scale shape: each round is one frontier⋈edges equi-join + a per-key
+  * min reduce + the engine's improvement merge at a fixed width; the
+  * report is a distance histogram, never the raw per-node frame.
   *
   * Exactness: weights and distances are BIGINT throughout.
   */
 object SsspOps {
 
-  val q555WeightedSssp: QueryDef = QueryDef(
-    "q555_weighted_sssp",
-    (s, dir) => {
-      val p = Tables(s, dir).part
-        .select(col("p_partkey").cast("long").as("child"))
-      // parent → child edges (reversed tree), entry cost 1 + child % 7
-      val edges = p.filter(col("child") > 1)
-        .select(expr("child div 2").as("parent"), col("child"))
-        .union(p.filter(col("child") > 2)
-          .select(expr("child div 3").as("parent"), col("child"))
-          .filter(col("parent") =!= expr("child div 2")))
-        .withColumn("w", lit(1L) + pmod(col("child"), lit(7L)))
-        .localCheckpoint() // relaxed every round
-      var dist = s.range(1).select(lit(1L).as("node"), lit(0L).as("d"))
-        .localCheckpoint()
-      var delta = dist
-      var rounds = 0
-      while (!delta.isEmpty && rounds < 64) {
-        rounds += 1
-        val cand = delta
-          .join(edges, delta("node") === edges("parent"))
-          .select(col("child").as("node"), (col("d") + col("w")).as("nd"))
-          .groupBy(col("node")).agg(min(col("nd")).as("nd"))
-        val improved = cand
-          .join(dist.withColumnRenamed("d", "old"), Seq("node"), "left")
-          .where(col("old").isNull || col("nd") < col("old"))
-          .select(col("node"), col("nd").as("d"))
-          .localCheckpoint()
-        dist = dist.join(improved.select(col("node")), Seq("node"),
-            "left_anti")
-          .unionByName(improved)
-          .localCheckpoint()
-        delta = improved
-      }
-      dist.groupBy(col("d"))
-        .agg(count(lit(1)).as("n_nodes"), sum(col("node")).as("node_sum"))
-        .orderBy(col("d"))
-    },
-    Some("""WITH RECURSIVE e AS (
+  /** Distance histogram (d, n_nodes, node_sum) of the weighted SSSP from
+    * part 1 over the parent → child edges k div 2 → k and k div 3 → k,
+    * entry cost 1 + child % 7. */
+  private[ops] def ssspHistogram(s: SparkSession, dir: String): DataFrame = {
+    val p = Tables(s, dir).part
+      .select(col("p_partkey").cast("long").as("child"))
+    val edges = p.filter(col("child") > 1)
+      .select(expr("child div 2").as("parent"), col("child"))
+      .union(p.filter(col("child") > 2)
+        .select(expr("child div 3").as("parent"), col("child"))
+        .filter(col("parent") =!= expr("child div 2")))
+      .withColumn("w", lit(1L) + pmod(col("child"), lit(7L)))
+      .localCheckpoint() // relaxed every round
+    val src = s.range(1).select(lit(1L).as("node"), lit(0L).as("d"))
+    GraphOps.pathFold("min", src, edges)
+      .groupBy(col("d"))
+      .agg(count(lit(1)).as("n_nodes"), sum(col("node")).as("node_sum"))
+      .orderBy(col("d"))
+  }
+
+  private[ops] val ssspOracle: String =
+    """WITH RECURSIVE e AS (
         SELECT p_partkey // 2 AS parent, p_partkey AS child,
           1 + p_partkey % 7 AS w
         FROM part WHERE p_partkey > 1
@@ -76,7 +63,10 @@ object SsspOps {
       dist AS (SELECT node, MIN(d) AS d FROM paths GROUP BY 1)
       SELECT d, CAST(COUNT(*) AS BIGINT) AS n_nodes,
         CAST(SUM(node) AS BIGINT) AS node_sum
-      FROM dist GROUP BY 1 ORDER BY 1"""))
+      FROM dist GROUP BY 1 ORDER BY 1"""
+
+  val q555WeightedSssp: QueryDef =
+    QueryDef("q555_weighted_sssp", ssspHistogram, Some(ssspOracle))
 
   val all: Seq[QueryDef] = Seq(q555WeightedSssp)
 }

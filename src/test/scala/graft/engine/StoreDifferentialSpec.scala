@@ -24,7 +24,9 @@ import scala.util.Random
   *
   * Graphs are transacted all-new, all-duplicate or partly duplicate (new
   * jobs plus one existing job they depend on), which every backend must
-  * swallow whole.
+  * swallow whole. Some jobs of an all-new graph already carry a status,
+  * a heartbeat or a failure, which every backend must keep, replay
+  * included.
   */
 class StoreDifferentialSpec extends AnyFunSuite {
   import StoreDifferentialSpec._
@@ -158,11 +160,15 @@ object StoreDifferentialSpec {
             val g = graph(rnd, s"g$graphs", None)
             val old = g0.jobs(rnd.nextInt(g0.jobs.size))
             Transact(JobGraph(g.jobs :+ old, g.deps :+ Dep(g.jobs.head.id, old.id)))
-          case _ =>
+          case _ => // all new; a third of the jobs arrive past unstarted
             graphs += 1
             val g = graph(rnd, s"g$graphs", None)
             known ++= g.jobs.map(_.id)
-            Transact(g)
+            Transact(g.copy(jobs = g.jobs.map(j =>
+              if (rnd.nextInt(3) > 0) j
+              else j.copy(status = status(),
+                heartbeat = if (rnd.nextBoolean()) Some(rnd.nextInt(9).toLong) else None,
+                failure = if (rnd.nextBoolean()) Some(s"""{"reason":"t${rnd.nextInt(9)}"}""") else None))))
         }
         case 2 | 3 => Info(id())
         case 4 | 5 | 6 => Reserve(id())

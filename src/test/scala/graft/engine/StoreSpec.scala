@@ -49,6 +49,24 @@ trait JobStoreBehaviors { this: AnyFunSuite =>
       durable.foreach { case (_, reopen) => holds(reopen()) }
     }
 
+    test("transact-graph keeps a job's status, heartbeat and failure, also after reopening") {
+      val durable = durableStore()
+      val s = durable.fold(freshStore())(_._1)
+      val jobs = Seq(
+        Job("s", "t", status = JobStatus.Started, heartbeat = Some(5L)),
+        Job("f", "t", status = JobStatus.Failed, args = Some("a"), failure = Some("""{"r":1}""")),
+        Job("e", "t", status = JobStatus.Failed, failure = Some("")),
+        Job("u", "t"))
+      s.transactGraph(JobGraph(jobs, Seq(Dep("u", "s"))))
+      def holds(st: JobStore): Unit = jobs.foreach { j =>
+        val got = st.jobInfo(j.id).get
+        assert((got.status, got.args, got.heartbeat, got.failure) ==
+          ((j.status, j.args, j.heartbeat, j.failure)), j.id)
+      }
+      holds(s)
+      durable.foreach { case (_, reopen) => holds(reopen()) }
+    }
+
     test("job-info roundtrips args (store_test.clj:42-52)") {
       val s = freshStore()
       val args = Some("""{"email":"foo@example.com","age":30}""")
