@@ -18,8 +18,10 @@ import org.apache.spark.sql.SparkSession
   *    min-of-2, in-suite isolated recheck at 1.3× floor) over the given
   *    subset, JSON written to <file>.
   *  - `<name>…` (manual): same single-JVM protocol over the subset,
-  *    JSON to stdout + BENCH.json — the re-measure path the verdicts use
-  *    (`runMain graft.Bench q109_prefix_filter_join`).
+  *    JSON to stdout only, so the tracked BENCH.json keeps the full suite
+  *    (`runMain graft.Bench q109_prefix_filter_join`). The data dir is
+  *    SPARK_GRAFT_SF_DIR in every mode, e.g. a 10× dir from ScaleGen for
+  *    the scale experiment in BASELINE.md.
   */
 object Bench {
 
@@ -338,13 +340,10 @@ object Bench {
     }.mkString("[", ",", "]")
     val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"isolated_rechecks":$recheckJson,"warmup":$warmJson,"runs_per_query":2,"agg":"min","sf":"$sfDir"}"""
     println(json)
-    // also write the artifact to a file: the driver's stdout capture is
-    // tail-bounded and one JSON line over 225 queries exceeds it (BENCH_r06
-    // and r07 both came back "parsed": null) — a committed file is always
-    // machine-readable
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(outFile.getOrElse("BENCH.json")),
-      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    // a chunk also writes its artifact to a file: one JSON line over a
+    // chunk's queries can exceed a tail-bounded stdout capture
+    outFile.foreach(f => java.nio.file.Files.write(java.nio.file.Paths.get(f),
+      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)))
     spark.stop()
   }
 }

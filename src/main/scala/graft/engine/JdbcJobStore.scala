@@ -37,6 +37,11 @@ import scala.collection.mutable
   */
 object JdbcJobStore {
 
+  /** Storage codes of the statuses the FSM table moves into aborted, as
+    * the abort UPDATE's `IN` list. */
+  private val abortableCodes: String =
+    JobStatus.into(JobStatus.Aborted).toSeq.map(JobStatus.code).sorted.mkString(", ")
+
   private def chain(e: SQLException): Iterator[SQLException] =
     Iterator.iterate(e)(_.getNextException).takeWhile(_ != null)
 
@@ -337,9 +342,9 @@ final class JdbcJobStore(url: String) extends JobStore with AutoCloseable {
   }
 
   /** Transitive dependents via the reference's iterative frontier over
-    * `overseer_dependencies` (jdbc.clj:96-116), then one bulk UPDATE. Only
-    * non-terminal rows transition ({unstarted,started}→aborted), matching
-    * the FSM and the other backends. The frontier reads and the UPDATE are
+    * `overseer_dependencies` (jdbc.clj:96-116), then one bulk UPDATE of the
+    * rows whose status [[JobStatus.transitions]] moves into aborted, as in
+    * the other backends. The frontier reads and the UPDATE are
     * idempotent, so an abort that loses a deadlock is re-run whole. */
   override def abortJob(id: String): Unit = lock.synchronized {
     JdbcJobStore.retryOnDeadlock(abortOnce(id))
@@ -362,7 +367,7 @@ final class JdbcJobStore(url: String) extends JobStore with AutoCloseable {
          |SET status = ${JobStatus.code(JobStatus.Aborted)},
          |    lock_version = lock_version + 1, updated_at = ?
          |WHERE id IN (${placeholders(ids.size)})
-         |  AND status IN (${JobStatus.code(JobStatus.Unstarted)}, ${JobStatus.code(JobStatus.Started)})""".stripMargin,
+         |  AND status IN (${JdbcJobStore.abortableCodes})""".stripMargin,
       now +: ids)
     ()
   }

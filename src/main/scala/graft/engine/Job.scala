@@ -42,7 +42,8 @@ object JobStatus {
     Map(Unstarted -> 0, Started -> 1, Finished -> 2, Failed -> 3, Aborted -> 4)
   val fromCode: Map[Int, String] = code.map(_.swap)
 
-  /** Legal FSM transitions (core.clj:86-106):
+  /** Legal FSM transitions (core.clj:86-106), the one table every writer
+    * consults:
     *  unstarted→started (reserve), started→finished|failed (system),
     *  started→unstarted (fault / monitor reset),
     *  {started,unstarted}→aborted (user, cascading). */
@@ -53,6 +54,13 @@ object JobStatus {
     Started   -> Unstarted,
     Started   -> Aborted,
     Unstarted -> Aborted)
+
+  /** target status -> the statuses the table moves into it from. */
+  val into: Map[String, Set[String]] =
+    all.iterator.map(to => to -> transitions.collect { case (from, `to`) => from }).toMap
+
+  /** A job is pending exactly when the table has a move out of its status. */
+  val pending: Set[String] = transitions.map(_._1)
 }
 
 object Squuid {

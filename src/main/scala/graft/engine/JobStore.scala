@@ -30,22 +30,22 @@ trait JobStore {
   /** Point lookup by id (reference core.clj:117-118). */
   def jobInfo(id: String): Option[Job]
 
-  /** CAS unstarted→started + set heartbeat=now; None on lost race
+  /** CAS into started + set heartbeat=now; None on lost race
     * (reference core.clj:120-122). */
-  def reserveJob(id: String): Option[Job] =
-    updateJob(id, _.status == JobStatus.Unstarted,
-      _.copy(status = JobStatus.Started, heartbeat = Some(now)))
+  def reserveJob(id: String): Option[Job] = {
+    val hb = Some(now)
+    move(id, JobStatus.Started)(_.copy(status = JobStatus.Started, heartbeat = hb))
+  }
 
-  /** CAS started→finished; throws IllegalStateException if stale
+  /** CAS into finished; throws IllegalStateException if stale
     * (reference core.clj:124-126). */
   def finishJob(id: String): Unit =
-    if (updateJob(id, _.status == JobStatus.Started, _.copy(status = JobStatus.Finished)).isEmpty)
+    if (move(id, JobStatus.Finished)(_.copy(status = JobStatus.Finished)).isEmpty)
       throw new IllegalStateException(s"finish-job: job $id not in started state")
 
-  /** CAS started→failed + store failure payload (core.clj:128-131). */
+  /** CAS into failed + store failure payload (core.clj:128-131). */
   def failJob(id: String, failure: Option[String]): Unit =
-    if (updateJob(id, _.status == JobStatus.Started,
-          _.copy(status = JobStatus.Failed, failure = failure)).isEmpty)
+    if (move(id, JobStatus.Failed)(_.copy(status = JobStatus.Failed, failure = failure)).isEmpty)
       throw new IllegalStateException(s"fail-job: job $id not in started state")
 
   /** Set heartbeat = now, unconditional w.r.t. status (core.clj:133-135). */
@@ -55,14 +55,14 @@ trait JobStore {
   }
 
   /** Set aborted on the job AND all transitive dependents, one bulk update
-    * (core.clj:137-139, jdbc.clj:214-221). */
+    * (core.clj:137-139, jdbc.clj:214-221); only jobs the FSM table moves
+    * into aborted change. */
   def abortJob(id: String): Unit
 
-  /** CAS started→unstarted (fault/monitor retry); None if lost race
+  /** CAS back into unstarted (fault/monitor retry); None if lost race
     * (core.clj:141-143). */
   def resetJob(id: String): Option[Job] =
-    updateJob(id, _.status == JobStatus.Started,
-      _.copy(status = JobStatus.Unstarted, heartbeat = None))
+    move(id, JobStatus.Unstarted)(_.copy(status = JobStatus.Unstarted, heartbeat = None))
 
   /** Jobs that are unstarted AND not blocked by any non-finished
     * dependency — the scheduler's anti-join (core.clj:145-147,
@@ -98,6 +98,20 @@ trait JobStore {
 
   /** Unix seconds: the clock of heartbeats and `updatedAt`. */
   protected def now: Long = System.currentTimeMillis() / 1000L
+
+  /** CAS `id` into status `to`: `f` applies only if [[JobStatus.transitions]]
+    * has a move from the job's current status into `to`. */
+  protected final def move(id: String, to: String)(f: Job => Job): Option[Job] =
+    updateJob(id, JobStore.entering(to), f)
+}
+
+private[engine] object JobStore {
+  /** Each target status's CAS predicate, built once from the FSM table so
+    * that a transition reads no table and allocates nothing under a store
+    * lock. */
+  val entering: Map[String, Job => Boolean] = JobStatus.into.map { case (to, from) =>
+    to -> ((j: Job) => from.contains(j.status))
+  }
 }
 
 /** Driver-local transactional store: plain maps under a lock. The CAS
@@ -109,6 +123,7 @@ trait JobStore {
 final class InMemoryJobStore extends JobStore {
 
   private val lock = new Object
+  private val aborts = JobStore.entering(JobStatus.Aborted)
   private var jobs = Map.empty[String, Job]
   private var deps = Vector.empty[Dep]
   private var installed = false
@@ -143,10 +158,9 @@ final class InMemoryJobStore extends JobStore {
   override def abortJob(id: String): Unit = lock.synchronized {
     val targets = JobGraph.dependents(deps, Set(id)) + id
     val t = now
-    // one bulk update; only non-terminal jobs transition (FSM: {started,unstarted}→aborted)
+    // one bulk update of the members the FSM table moves into aborted
     jobs = jobs.map {
-      case (k, j) if targets.contains(k) &&
-          (j.status == JobStatus.Unstarted || j.status == JobStatus.Started) =>
+      case (k, j) if targets.contains(k) && aborts(j) =>
         k -> j.copy(status = JobStatus.Aborted, lockVersion = j.lockVersion + 1, updatedAt = t)
       case kv => kv
     }

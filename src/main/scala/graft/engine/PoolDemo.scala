@@ -41,8 +41,7 @@ object PoolDemo {
       WorkerConfig(detectorSleepMs = 2, sleepMs = 2)).start()
 
     val deadline = System.currentTimeMillis() + maxWaitMs
-    def pending(): Boolean = store.snapshotJobs.exists(j =>
-      j.status == JobStatus.Unstarted || j.status == JobStatus.Started)
+    def pending(): Boolean = store.snapshotJobs.exists(j => JobStatus.pending(j.status))
     while (System.currentTimeMillis() < deadline && pending()) Thread.sleep(20)
     val timedOut = pending()
     worker.stop()

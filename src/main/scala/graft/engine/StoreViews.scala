@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.plans.Datalog._
 
 /** The store's relational surface as Spark DataFrames — every query the
   * reference issues against its own tables (SURVEY.md §2D), re-expressed as
@@ -23,10 +24,6 @@ object StoreViews {
     import spark.implicits._
     spark.createDataset(store.snapshotDeps)
   }
-
-  /** §2D row 1 — point lookup: filter + project + limit 1. */
-  def jobInfo(jobs: DataFrame, id: String): DataFrame =
-    jobs.filter(col("id") === lit(id)).limit(1)
 
   /** §2D row 4 — the scheduler's readiness anti-join (jdbc.clj:230-242):
     * unstarted jobs with NO dependency whose parent is non-finished.
@@ -55,40 +52,34 @@ object StoreViews {
   def statusCounts(jobs: DataFrame): DataFrame =
     jobs.groupBy(col("status")).agg(count(lit(1)).as("n"))
 
-  /** §2D row 3 — direct dependents: distinct semi-join projection. */
-  def directDependents(deps: DataFrame, frontier: DataFrame): DataFrame =
-    deps.join(frontier, deps("depId") === frontier("id"), "left_semi")
-      .select(col("jobId").as("id"))
-      .distinct()
-
-  /** §2D row 6 — transitive closure of dependents: iterative BFS fixpoint
-    * over the edge table, cycle-safe via the accumulated visited set
-    * (reference jdbc.clj:101-113). Catalyst can't express recursion, so the
-    * loop runs on the driver; each level is one distributed semi-join.
-    * `localCheckpoint` truncates the growing lineage so the plan stays flat
-    * at high depth (a 1000-level chain would otherwise stack 1000 joins).
+  /** dependents as a rooted rule pair (reference jdbc.clj:101-113,
+    * datomic.clj:93-96), with edge(x, y) = x depends on y:
+    *   reach(x) ← root(r) ∧ edge(x, r)
+    *   reach(x) ← reach(y) ∧ edge(x, y)
     */
+  private val dependentsProgram = Program(Seq(
+    Rule(Atom("reach", Seq(V("x"))),
+      Seq(Atom("root", Seq(V("r"))), Atom("edge", Seq(V("x"), V("r"))))),
+    Rule(Atom("reach", Seq(V("x"))),
+      Seq(Atom("reach", Seq(V("y"))), Atom("edge", Seq(V("x"), V("y")))))))
+
+  /** §2D row 6 — transitive dependents of `rootIds`, the roots themselves
+    * excluded: [[dependentsProgram]] under [[graft.plans.Datalog]]'s
+    * semi-naive fixpoint, so each round joins only the jobs first reached
+    * last round, every round is checkpointed, and a cycle through a root
+    * or through visited jobs derives nothing new. */
   def dependents(spark: SparkSession, deps: DataFrame, rootIds: Seq[String]): DataFrame = {
     import spark.implicits._
     val roots = rootIds.toDF("id")
-    var visited  = spark.emptyDataset[String].toDF("id")
-    var frontier = roots
-    while (!frontier.isEmpty) {
-      // localCheckpoint EVERY level: the frontier feeds both the next level
-      // and the visited union, so an unmaterialized plan doubles per level
-      // (exponential analysis cost); checkpointing keeps every plan flat.
-      val next = directDependents(deps, broadcast(frontier))
-        .join(visited, Seq("id"), "left_anti")
-        .join(broadcast(roots), Seq("id"), "left_anti")
-        .localCheckpoint()
-      visited = visited.union(next)
-      frontier = next
-    }
-    visited.distinct()
+    dependentsProgram
+      .run(Map("root" -> roots, "edge" -> deps.select(col("jobId"), col("depId"))), "reach")
+      .select(col("_p0").as("id"))
+      .join(broadcast(roots), Seq("id"), "left_anti")
   }
 
   /** §2D row 7 — cascading bulk status update: closure ∪ self → overwrite of
-    * the status column for non-terminal members (abort cascade). */
+    * the status column for the members the FSM table moves into aborted
+    * (abort cascade). */
   def abortCascade(spark: SparkSession, jobs: DataFrame, deps: DataFrame, id: String): DataFrame = {
     val targets = dependents(spark, deps, Seq(id)).union(spark.createDataFrame(
       java.util.List.of(org.apache.spark.sql.Row(id)),
@@ -96,7 +87,7 @@ object StoreViews {
     jobs.join(targets.withColumnRenamed("id", "t_id"), col("id") === col("t_id"), "left")
       .withColumn("status",
         when(col("t_id").isNotNull &&
-             col("status").isin(JobStatus.Unstarted, JobStatus.Started),
+             col("status").isin(JobStatus.into(JobStatus.Aborted).toSeq: _*),
              lit(JobStatus.Aborted))
           .otherwise(col("status")))
       .drop("t_id")

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.functions._
+import graft.engine.JobStatus
 import graft.plans.Datalog._
 
 /** The datalog rule surface exercised against the test tables — the
@@ -81,6 +82,21 @@ object DatalogOps {
       FROM dep GROUP BY 1
       ORDER BY n_dependents DESC, node LIMIT 20"""))
 
+  /** jobs-ready' as the reference writes it (datomic.clj:105-117), over
+    * job(id, status) and dep(job, parent):
+    *   blocked(j) ← dep(j, d) ∧ job(d, s) ∧ s ≠ finished
+    *   ready(j)   ← job(j, unstarted) ∧ ¬blocked(j)
+    * Negation compiles to one left_anti over one join, the plan
+    * [[graft.engine.StoreViews.jobsReady]] declares. */
+  private[graft] val readyProgram = Program(Seq(
+    Rule(Atom("blocked", Seq(V("j"))),
+      Seq(Atom("dep", Seq(V("j"), V("d"))),
+        Atom("job", Seq(V("d"), V("s")))),
+      Seq(Guard("!=", V("s"), C(JobStatus.Finished)))),
+    Rule(Atom("ready", Seq(V("j"))),
+      Seq(Atom("job", Seq(V("j"), C(JobStatus.Unstarted))),
+        Atom("blocked", Seq(V("j")), negated = true)))))
+
   val q502DatalogReady: QueryDef = QueryDef(
     "q502_datalog_ready",
     (s, dir) => {
@@ -93,16 +109,7 @@ object DatalogOps {
             .otherwise(lit("unstarted")).as("status"))
       val deps = jobs.select(col("j")).filter(col("j") > 1)
         .select(col("j"), expr("j div 2").as("d"))
-      // the reference's blocked?/ready rule pair, verbatim shape
-      val program = Program(Seq(
-        Rule(Atom("blocked", Seq(V("j"))),
-          Seq(Atom("dep", Seq(V("j"), V("d"))),
-            Atom("job", Seq(V("d"), V("s")))),
-          Seq(Guard("!=", V("s"), C("finished")))),
-        Rule(Atom("ready", Seq(V("j"))),
-          Seq(Atom("job", Seq(V("j"), C("unstarted"))),
-            Atom("blocked", Seq(V("j")), negated = true)))))
-      val ready = program.run(
+      val ready = readyProgram.run(
         Map("job" -> jobs, "dep" -> deps), "ready")
         .agg(count(lit(1)).as("n_ready"), sum(col("_p0")).as("ready_key_sum"))
       val totals = jobs.agg(count(lit(1)).as("n_jobs"),

@@ -171,17 +171,9 @@ object GraphOps {
         Seq(Atom("dist", Seq(V("x"), V("d"))),
           Atom("edge", Seq(V("x"), V("y"), V("w")))),
         lets = Seq(Let("nd", "d + w")), fold = fold)))
-      .run(Map("seed" -> scattered(seed), "edge" -> e), "dist")
+      .run(Map("seed" -> seed, "edge" -> e), "dist")
       .toDF(seed.columns.toSeq: _*)
   }
-
-  /** A fold's seed in round-robin layout. The engine lays a folded head
-    * out at its own fixed hash width through the fold's groupBy; a seed
-    * already clustered on its key column (a Range over node ids, a hash
-    * layout) would skip that exchange and reach the merge at the wrong
-    * width. */
-  private def scattered(seed: DataFrame): DataFrame =
-    seed.repartition(seed.sparkSession.sparkContext.defaultParallelism)
 
   /** Connected components over an undirected edge set by min-label
     * propagation, as a min-fold program over the symmetrized edges:
@@ -206,8 +198,7 @@ object GraphOps {
       Rule(Atom("cc", Seq(V("x"), V("l"))),
         Seq(Atom("cc", Seq(V("y"), V("l"))), Atom("und", Seq(V("y"), V("x")))),
         fold = fold)))
-      .run(Map("node" -> scattered(und.select(col("src"), col("src").as("l"))),
-        "und" -> und), "cc")
+      .run(Map("node" -> und.select(col("src"), col("src").as("l")), "und" -> und), "cc")
       .toDF("id", "label")
   }
 

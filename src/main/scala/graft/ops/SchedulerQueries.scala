@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.engine.StoreViews
 
 /** The reference's scheduler queries (SURVEY.md §2D) expressed as
   * DataFrame plans over the analytic tables, proving the §2B/§2C relational
@@ -14,8 +15,9 @@ object SchedulerQueries {
   /** jobs-ready (§2D row 4, jdbc.clj:230-242) over a job table derived from
     * orders: each order is a "job" whose dependency is the same customer's
     * previous order; status comes from o_orderstatus (F=finished, P=started,
-    * O=unstarted). Ready = unstarted ∧ (no dep ∨ dep finished) — the exact
-    * NOT-IN + join shape, planned as a left_anti. */
+    * O=unstarted). Ready = unstarted ∧ (no dep ∨ dep finished) — the
+    * store's own readiness plan, [[StoreViews.jobsReady]], over these
+    * tables. */
   val q33JobsReady: QueryDef = QueryDef(
     "q33_jobs_ready",
     (s, dir) => {
@@ -26,16 +28,10 @@ object SchedulerQueries {
           .otherwise(lit("unstarted")).as("status"))
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_orderdate").asc, col("id").asc)
-      val deps = jobs.withColumn("dep_id", lag(col("id"), 1).over(w))
-        .filter(col("dep_id").isNotNull)
-        .select(col("id").as("job_id"), col("dep_id"))
-      val blocked = deps
-        .join(jobs.filter(col("status") =!= "finished").select(col("id").as("dep_id")),
-              Seq("dep_id"), "left_semi")
-        .select(col("job_id").as("id")).distinct()
-      jobs.filter(col("status") === "unstarted")
-        .join(blocked, Seq("id"), "left_anti")
-        .select(col("id"), col("o_custkey"))
+      val deps = jobs.withColumn("depId", lag(col("id"), 1).over(w))
+        .filter(col("depId").isNotNull)
+        .select(col("id").as("jobId"), col("depId"))
+      StoreViews.jobsReady(jobs, deps).select(col("id"), col("o_custkey"))
     },
     Some("""WITH jobs AS (
         SELECT o_orderkey AS id, o_custkey, o_orderdate,

@@ -428,11 +428,9 @@ object Datalog {
 
     /** Reduce a folded head's candidates to one row per key —
       * groupBy(keys).agg(min|max|sum(value)), columns restored to
-      * ordinal order. The groupBy's own exchange is the hash(keys,
-      * width) layout the recursive solution maps live in. Sum folds
-      * additionally drop zero contributions (the semiring's absorbing
-      * zero — identity under +, so dropping is sound and keeps empty
-      * rounds empty). */
+      * ordinal order. Sum folds additionally drop zero contributions
+      * (the semiring's absorbing zero — identity under +, so dropping is
+      * sound and keeps empty rounds empty). */
     private def reduceFold(df: DataFrame, f: Fold): DataFrame = {
       val cols = df.columns.sortBy(_.drop(2).toInt).toSeq
       val valCol = s"_p${f.at}"
@@ -697,9 +695,12 @@ object Datalog {
               }
               val empty: State = (Arena.empty, Arena.empty)
               // layout: folded heads pre-reduce per key (one min/max per
-              // key per round reaches the merge) and the groupBy's own
-              // exchange IS the hash(keys, n) layout; set heads lay out
-              // by the whole tuple. Set-head identity is RAW UnsafeRow
+              // key per round reaches the merge), then repartition on the
+              // keys at width n: EnsureRequirements drops that exchange
+              // when the groupBy's own already produced hash(keys, n), and
+              // keeps it when the input arrived clustered on the keys at
+              // another width (no groupBy exchange then); set heads lay
+              // out by the whole tuple. Set-head identity is RAW UnsafeRow
               // bytes, so floating-point columns are canonicalized first
               // (-0.0 → +0.0, any NaN → the canonical NaN) — SQL
               // .distinct() equates these and the byte walk must agree,
@@ -708,7 +709,7 @@ object Datalog {
               // grouping keys (NormalizeFloatingNumbers) and the value
               // column is compared numerically, not byte-wise.
               val laidOut = fold match {
-                case Some(f) => reduceFold(cand, f)
+                case Some(f) => reduceFold(cand, f).repartition(n, keyIdx.map(i => col(cols(i))): _*)
                 case None =>
                   import org.apache.spark.sql.types.FloatType
                   val canon = cand.schema.fields.foldLeft(cand) { (df, fld) =>

@@ -24,26 +24,30 @@ object FsmStream {
   /** Current state of one job (the jobs-table row this stream maintains). */
   final case class JobState(jobId: String, status: String, heartbeat: Long, failures: Int)
 
+  /** The status each write event moves a job into; heartbeat moves none. */
+  private val target: Map[String, String] = Map(
+    "reserve" -> JobStatus.Started, "finish" -> JobStatus.Finished,
+    "fail" -> JobStatus.Failed, "reset" -> JobStatus.Unstarted,
+    "abort" -> JobStatus.Aborted)
+
   /** Apply one event under the reference's legal-transition rules
-    * (core.clj:86-106); illegal transitions are ignored (the CAS-lost-race
-    * analog: the store form returns nil, the stream form drops the event). */
-  def step(st: JobState, ev: JobEvent): JobState = (st.status, ev.event) match {
-    case (JobStatus.Unstarted, "reserve") => st.copy(status = JobStatus.Started, heartbeat = ev.atSec)
-    case (JobStatus.Started, "finish")    => st.copy(status = JobStatus.Finished)
-    case (JobStatus.Started, "fail")      => st.copy(status = JobStatus.Failed, failures = st.failures + 1)
-    case (JobStatus.Started, "reset")     => st.copy(status = JobStatus.Unstarted, heartbeat = 0L)
-    case (JobStatus.Started, "abort")     => st.copy(status = JobStatus.Aborted)
-    case (JobStatus.Unstarted, "abort")   => st.copy(status = JobStatus.Aborted)
-    case (_, "heartbeat")                 => st.copy(heartbeat = ev.atSec)
-    case _                                => st // illegal: lost race / stale
-  }
+    * (core.clj:86-106), read from [[JobStatus.transitions]]; illegal
+    * transitions are ignored (the CAS-lost-race analog: the store form
+    * returns nil, the stream form drops the event). */
+  def step(st: JobState, ev: JobEvent): JobState =
+    if (ev.event == "heartbeat") st.copy(heartbeat = ev.atSec)
+    else target.get(ev.event).filter(to => JobStatus.into(to)(st.status)) match {
+      case Some(JobStatus.Started)   => st.copy(status = JobStatus.Started, heartbeat = ev.atSec)
+      case Some(JobStatus.Failed)    => st.copy(status = JobStatus.Failed, failures = st.failures + 1)
+      case Some(JobStatus.Unstarted) => st.copy(status = JobStatus.Unstarted, heartbeat = 0L)
+      case Some(to)                  => st.copy(status = to)
+      case None                      => st // illegal: lost race / stale
+    }
 
   /** Dead-job monitor semantics for a group-state timeout: a `started` job
     * that stayed silent for the timeout window is released for retry
     * (reference heartbeat.clj:51-68). */
-  def onTimeout(st: JobState): JobState =
-    if (st.status == JobStatus.Started) st.copy(status = JobStatus.Unstarted, heartbeat = 0L)
-    else st
+  def onTimeout(st: JobState): JobState = step(st, JobEvent(st.jobId, "reset", 0L))
 
   /** Fold transition events into per-job state.
     *

@@ -1,91 +1,21 @@
 package graft.engine
 
 import graft.SparkTestBase
+import graft.ops.DatalogOps
 
-/** The datalog rule engine as an actual Store query leg: the reference's
-  * second declarative backend (store/datomic.clj:89-133) evaluated
-  * against real store snapshots, agreeing with BOTH the driver-side store
-  * and the hand-written StoreViews plans on the reference's own fixtures:
-  * the 7-configuration readiness truth table
-  * (test/overseer/store/datomic_test.clj:14-64), the dependents closure,
-  * and liveness. Also asserts the COMPILED plan shape: the negation rule
-  * must reach the same join + left_anti physical shape StoreViews
-  * declares by hand — the rule indirection may not introduce extra
-  * shuffles or change the join strategy class.
+/** The compiled plan shape of the readiness rules: q502's rule pair
+  * (reference store/datomic.clj:105-117) over a store snapshot must reach
+  * the same join + left_anti shape [[StoreViews.jobsReady]] declares — the
+  * rule indirection may not introduce extra joins or change the join
+  * strategy class. That both give the store's answer on every backend is
+  * ReadinessSpec's.
   */
 class DatalogStoreSpec extends SparkTestBase {
 
-  private def matrixStore(mk: () => JobStore): JobStore = {
-    val s = mk(); s.install()
-    val jobs = (1 to 9).map(i => Job(s"j$i", s"type-j$i"))
-    val deps = Seq(Dep("j3", "j2"), Dep("j5", "j4"), Dep("j6", "j3"),
-      Dep("j6", "j4"), Dep("j8", "j9"))
-    s.transactGraph(JobGraph(jobs, deps))
-    s.reserveJob("j2")
-    s.reserveJob("j4"); s.finishJob("j4")
-    s.abortJob("j7")
-    s.reserveJob("j9"); s.failJob("j9", None)
-    s
-  }
-
-  private def frames(s: JobStore) =
-    (StoreViews.jobsDF(spark, s).toDF(), StoreViews.depsDF(spark, s).toDF())
-
-  // the truth table through the rule engine, against BOTH a driver-side
-  // in-memory store and the SQL-backed Derby store — the datalog leg is
-  // backend-agnostic because it only sees snapshot frames
-  private val backends: Seq[(String, () => JobStore)] = Seq(
-    "in-memory" -> (() => new InMemoryJobStore),
-    "jdbc-derby" -> (() => new JdbcJobStore(
-      s"jdbc:derby:memory:dlstore${System.nanoTime()};create=true")))
-
-  backends.foreach { case (name, mk) =>
-    test(s"readiness truth table through rules == store == StoreViews [$name]") {
-      val s = matrixStore(mk)
-      val (jobs, deps) = frames(s)
-      val viaRules = DatalogStoreViews.jobsReady(jobs, deps)
-        .collect().map(_.getString(0)).toSet
-      val viaHand = StoreViews.jobsReady(jobs, deps)
-        .select("id").collect().map(_.getString(0)).toSet
-      assert(viaRules == s.jobsReady())
-      assert(viaRules == viaHand)
-      assert(viaRules == Set("j1", "j5"))
-    }
-  }
-
-  test("jobs-dead guard rule == store == StoreViews") {
-    val s = matrixStore(() => new InMemoryJobStore)
-    val now = System.currentTimeMillis() / 1000
-    s.updateJob("j2", _ => true, _.copy(heartbeat = Some(now - 1000)))
-    val (jobs, _) = frames(s)
-    val viaRules = DatalogStoreViews.jobsDead(jobs, now - 100)
-      .collect().map(_.getString(0)).toSet
-    val viaHand = StoreViews.jobsDead(jobs, now - 100)
-      .select("id").collect().map(_.getString(0)).toSet
-    assert(viaRules == s.jobsDead(now - 100))
-    assert(viaRules == viaHand)
-    assert(viaRules == Set("j2"))
-  }
-
-  test("dependents closure rule == driver BFS == StoreViews on diamond + chain") {
-    val s = new InMemoryJobStore; s.install()
-    val g = JobGraph.jobGraph(Map(
-      "b" -> Seq("a"), "c" -> Seq("a"), "d" -> Seq("b", "c"), "e" -> Seq("d")))
-    s.transactGraph(g)
-    val id = g.jobs.map(j => j.jobType -> j.id).toMap
-    val (_, deps) = frames(s)
-    val viaRules = DatalogStoreViews.dependents(spark, deps, Seq(id("a")))
-      .collect().map(_.getString(0)).toSet
-    val viaHand = StoreViews.dependents(spark, deps, Seq(id("a")))
-      .collect().map(_.getString(0)).toSet
-    assert(viaRules == JobGraph.dependents(s.snapshotDeps, Set(id("a"))))
-    assert(viaRules == viaHand)
-    assert(viaRules == Set(id("b"), id("c"), id("d"), id("e")))
-  }
-
   test("compiled readiness plan shape == hand-written plan shape (join + left_anti)") {
-    val s = matrixStore(() => new InMemoryJobStore)
-    val (jobs, deps) = frames(s)
+    val s = TruthTable.build(new InMemoryJobStore)
+    val jobs = StoreViews.jobsDF(spark, s).toDF()
+    val deps = StoreViews.depsDF(spark, s).toDF()
     def joinKinds(df: org.apache.spark.sql.DataFrame): Seq[String] = {
       val plan = df.queryExecution.optimizedPlan
       plan.collect {
@@ -93,13 +23,13 @@ class DatalogStoreSpec extends SparkTestBase {
           j.joinType.sql
       }.sorted
     }
-    import org.apache.spark.sql.functions.{coalesce => _, col}
+    import org.apache.spark.sql.functions.col
     val jobRel = jobs.select(col("id"), col("status"))
     val depRel = deps.select(col("jobId"), col("depId"))
     // materializeSeeds = false keeps the whole compiled plan visible
     // (no checkpoint truncation) — sound here: the program is
     // non-recursive, so no semi-naive rounds run
-    val rulePlan = DatalogStoreViews.readyProgram
+    val rulePlan = DatalogOps.readyProgram
       .run(Map("job" -> jobRel, "dep" -> depRel), "ready",
         materializeSeeds = false)
     val ruleKinds = joinKinds(rulePlan)
@@ -112,6 +42,6 @@ class DatalogStoreSpec extends SparkTestBase {
     assert(ruleKinds.size == 2 && handKinds.size == 2,
       s"expected join + left_anti on both paths: $ruleKinds vs $handKinds")
     // and the compiled rule plan agrees with the hand plan's rows
-    assert(rulePlan.collect().map(_.getString(0)).toSet == Set("j1", "j5"))
+    assert(rulePlan.collect().map(_.getString(0)).toSet == TruthTable.ready)
   }
 }

@@ -1,86 +1,97 @@
 package graft.engine
 
+import scala.util.Random
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import graft.SparkTestBase
+import graft.ops.DatalogOps
 
-/** The 7-configuration readiness truth table
-  * (test/overseer/store/datomic_test.clj:14-64), asserted against BOTH the
-  * driver-side store and the distributed DataFrame anti-join (StoreViews),
-  * which must agree. */
+/** The one store-query spec: every [[StoreViews]] query over a snapshot of
+  * each of the four backends (`memory`, `log`, `shared-log`, `jdbc`) must
+  * give the store's own answer — readiness through the hand plan and
+  * through q502's rule pair, liveness, dependents, and the abort cascade
+  * against the store's `abortJob`. Fixture: [[TruthTable]]. */
 class ReadinessSpec extends SparkTestBase {
+  import TruthTable.onEachBackend
 
-  def buildMatrix(): (InMemoryJobStore, Map[String, String]) = {
-    val s = new InMemoryJobStore; s.install()
-    def j(n: String) = Job(n, s"type-$n")
-    // 1 ready (no deps) / 2 started / 3 blocked by unstarted 1? no—use docs:
-    //   j1 unstarted no deps            → ready
-    //   j2 started                      → not ready
-    //   j3 unstarted ← j2 (unstarted parent started) → blocked
-    //   j4 finished                     → not ready
-    //   j5 unstarted ← j4 (finished)    → ready
-    //   j6 unstarted ← {j3 unstarted, j4 finished} → blocked
-    //   j7 aborted                      → not ready
-    //   j8 unstarted ← j9 failed        → blocked
-    val jobs = (1 to 9).map(i => j(s"j$i"))
-    val deps = Seq(Dep("j3", "j2"), Dep("j5", "j4"), Dep("j6", "j3"), Dep("j6", "j4"),
-                   Dep("j8", "j9"))
-    s.transactGraph(JobGraph(jobs, deps))
-    s.reserveJob("j2")
-    s.reserveJob("j4"); s.finishJob("j4")
-    s.abortJob("j7")
-    s.reserveJob("j9"); s.failJob("j9", None)
-    (s, jobs.map(x => x.id -> x.jobType).toMap)
-  }
+  private def frames(s: JobStore): (DataFrame, DataFrame) =
+    (StoreViews.jobsDF(spark, s).toDF(), StoreViews.depsDF(spark, s).toDF())
+
+  private def ids(df: DataFrame): Set[String] =
+    df.select("id").collect().map(_.getString(0)).toSet
 
   test("readiness matrix: store agrees with the truth table") {
-    val (s, _) = buildMatrix()
-    assert(s.jobsReady() == Set("j1", "j5"))
+    onEachBackend { (name, s) =>
+      assert(TruthTable.build(s).jobsReady() == TruthTable.ready, name)
+    }
   }
 
   test("readiness matrix: DataFrame anti-join agrees with the store") {
-    val (s, _) = buildMatrix()
-    val jobs = StoreViews.jobsDF(spark, s).toDF()
-    val deps = StoreViews.depsDF(spark, s).toDF()
-    val ready = StoreViews.jobsReady(jobs, deps)
-      .select("id").collect().map(_.getString(0)).toSet
-    assert(ready == s.jobsReady())
+    onEachBackend { (name, s) =>
+      val (jobs, deps) = frames(TruthTable.build(s))
+      val viaPlan = ids(StoreViews.jobsReady(jobs, deps))
+      val viaRules = DatalogOps.readyProgram
+        .run(Map("job" -> jobs.select(col("id"), col("status")),
+          "dep" -> deps.select(col("jobId"), col("depId"))), "ready")
+        .collect().map(_.getString(0)).toSet
+      assert(viaPlan == s.jobsReady(), name)
+      assert(viaRules == viaPlan, name)
+    }
   }
 
   test("jobs-dead DataFrame filter agrees with the store") {
-    val (s, _) = buildMatrix()
-    val now = System.currentTimeMillis() / 1000
-    s.updateJob("j2", _ => true, _.copy(heartbeat = Some(now - 1000)))
-    val jobs = StoreViews.jobsDF(spark, s).toDF()
-    val deadDF = StoreViews.jobsDead(jobs, now - 100)
-      .select("id").collect().map(_.getString(0)).toSet
-    assert(deadDF == s.jobsDead(now - 100))
-    assert(deadDF == Set("j2"))
+    onEachBackend { (name, s) =>
+      // j2 is the one started job; its heartbeat is its reserve time
+      val (jobs, _) = frames(TruthTable.build(s))
+      val after = System.currentTimeMillis() / 1000 + 100
+      assert(ids(StoreViews.jobsDead(jobs, after)) == s.jobsDead(after), name)
+      assert(s.jobsDead(after) == Set("j2"), name)
+      assert(ids(StoreViews.jobsDead(jobs, 0L)).isEmpty, name)
+    }
   }
 
   test("dependents fixpoint DataFrame agrees with driver BFS on the diamond + chain") {
-    val s = new InMemoryJobStore; s.install()
-    val g = JobGraph.jobGraph(Map(
-      "b" -> Seq("a"), "c" -> Seq("a"), "d" -> Seq("b", "c"), "e" -> Seq("d")))
-    s.transactGraph(g)
-    val id = g.jobs.map(j => j.jobType -> j.id).toMap
-    val deps = StoreViews.depsDF(spark, s).toDF()
-    val got = StoreViews.dependents(spark, deps, Seq(id("a")))
-      .collect().map(_.getString(0)).toSet
-    assert(got == JobGraph.dependents(s.snapshotDeps, Set(id("a"))))
-    assert(got == Set(id("b"), id("c"), id("d"), id("e")))
+    onEachBackend { (name, s) =>
+      s.install()
+      val g = JobGraph.jobGraph(Map(
+        "b" -> Seq("a"), "c" -> Seq("a"), "d" -> Seq("b", "c"), "e" -> Seq("d")))
+      s.transactGraph(g)
+      val id = g.jobs.map(j => j.jobType -> j.id).toMap
+      val (_, deps) = frames(s)
+      val got = ids(StoreViews.dependents(spark, deps, Seq(id("a"))))
+      assert(got == JobGraph.dependents(s.snapshotDeps, Set(id("a"))), name)
+      assert(got == Set(id("b"), id("c"), id("d"), id("e")), name)
+    }
   }
 
   test("abort cascade DataFrame marks exactly the closure (store_test.clj:106-124)") {
-    val s = new InMemoryJobStore; s.install()
-    val g = JobGraph.jobGraph(Map("j1" -> Seq("j0"), "j2" -> Seq("j1"), "x" -> Seq.empty))
-    s.transactGraph(g)
-    val id = g.jobs.map(j => j.jobType -> j.id).toMap
-    val jobs = StoreViews.jobsDF(spark, s).toDF()
-    val deps = StoreViews.depsDF(spark, s).toDF()
-    val after = StoreViews.abortCascade(spark, jobs, deps, id("j1"))
-      .select("id", "status").collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(after(id("j1")) == JobStatus.Aborted)
-    assert(after(id("j2")) == JobStatus.Aborted)
-    assert(after(id("j0")) == JobStatus.Unstarted)
-    assert(after(id("x")) == JobStatus.Unstarted)
+    onEachBackend { (name, s) =>
+      TruthTable.build(s)
+      // j4 is finished and stays so; j2 is started; j6 hangs off both
+      Seq("j4", "j2").foreach { root =>
+        val (jobs, deps) = frames(s)
+        val cascade = StoreViews.abortCascade(spark, jobs, deps, root)
+          .select("id", "status").collect().map(r => r.getString(0) -> r.getString(1)).toMap
+        s.abortJob(root)
+        assert(cascade == s.snapshotJobs.map(j => j.id -> j.status).toMap, s"$name abort $root")
+      }
+      assert(s.jobsWithStatus(JobStatus.Aborted) == Set("j2", "j3", "j5", "j6", "j7"), name)
+      assert(s.jobsWithStatus(JobStatus.Finished) == Set("j4"), name)
+    }
+  }
+
+  test("dependents: StoreViews equals JobGraph on 20 seeded random graphs with cycles") {
+    (0 until 20).foreach { g =>
+      val rnd = new Random(8100 + g)
+      val nodes = 4 + rnd.nextInt(9)
+      // random edges over a small id space, so cycles and self loops occur
+      val deps = Seq.fill(nodes + rnd.nextInt(2 * nodes)) {
+        Dep(s"n${rnd.nextInt(nodes)}", s"n${rnd.nextInt(nodes)}")
+      }.distinct
+      val roots = Seq.fill(1 + rnd.nextInt(3))(s"n${rnd.nextInt(nodes)}").distinct
+      import spark.implicits._
+      val got = ids(StoreViews.dependents(spark, deps.toDF(), roots))
+      assert(got == JobGraph.dependents(deps, roots.toSet), s"graph $g: $deps from $roots")
+    }
   }
 }

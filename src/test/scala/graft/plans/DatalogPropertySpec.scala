@@ -11,7 +11,7 @@ import graft.plans.Datalog._
   * engine and by an independent naive in-memory evaluator
   * (substitution-enumeration to fixpoint), which must agree EXACTLY on
   * every IDB relation. The engine is load-bearing for q501/q502 and the
-  * DatalogStoreViews store leg, so its unification/stratification corner
+  * store's dependents view, so its unification/stratification corner
   * cases get property coverage, not just the reference's fixtures.
   *
   * Generation is constrained-by-construction (the repo's seeded-Random

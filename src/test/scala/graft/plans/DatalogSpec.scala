@@ -11,20 +11,7 @@ import graft.plans.Datalog._
   * logarithmic non-linear closure). */
 class DatalogSpec extends SparkTestBase {
 
-  private def matrixStore(): InMemoryJobStore = {
-    val s = new InMemoryJobStore; s.install()
-    val jobs = (1 to 9).map(i => Job(s"j$i", s"type-j$i"))
-    val deps = Seq(Dep("j3", "j2"), Dep("j5", "j4"), Dep("j6", "j3"),
-      Dep("j6", "j4"), Dep("j8", "j9"))
-    s.transactGraph(JobGraph(jobs, deps))
-    s.reserveJob("j2")
-    s.reserveJob("j4"); s.finishJob("j4")
-    s.abortJob("j7")
-    s.reserveJob("j9"); s.failJob("j9", None)
-    s
-  }
-
-  private def edb(s: InMemoryJobStore) = {
+  private def edb(s: JobStore) = {
     import org.apache.spark.sql.functions._
     val jobs = StoreViews.jobsDF(spark, s).toDF()
       .select(col("id"), col("status"))
@@ -33,23 +20,14 @@ class DatalogSpec extends SparkTestBase {
     (jobs, deps)
   }
 
-  private val readyRules = Seq(
-    Rule(Atom("blocked", Seq(V("j"))),
-      Seq(Atom("dep", Seq(V("j"), V("d"))),
-        Atom("job", Seq(V("d"), V("s")))),
-      Seq(Guard("!=", V("s"), C(JobStatus.Finished)))),
-    Rule(Atom("ready", Seq(V("j"))),
-      Seq(Atom("job", Seq(V("j"), C(JobStatus.Unstarted))),
-        Atom("blocked", Seq(V("j")), negated = true))))
-
   test("readiness truth table: rules agree with the store (j1, j5)") {
-    val s = matrixStore()
+    val s = TruthTable.build(new InMemoryJobStore)
     val (jobs, deps) = edb(s)
-    val ready = Program(readyRules)
+    val ready = graft.ops.DatalogOps.readyProgram
       .run(Map("job" -> jobs, "dep" -> deps), "ready")
       .collect().map(_.getString(0)).toSet
     assert(ready == s.jobsReady())
-    assert(ready == Set("j1", "j5"))
+    assert(ready == TruthTable.ready)
   }
 
   test("dependents doubling rule == driver BFS on the diamond + chain") {
@@ -79,7 +57,7 @@ class DatalogSpec extends SparkTestBase {
   }
 
   test("liveness guard rule == store.jobsDead") {
-    val s = matrixStore()
+    val s = TruthTable.build(new InMemoryJobStore)
     val now = System.currentTimeMillis() / 1000
     s.updateJob("j2", _ => true, _.copy(heartbeat = Some(now - 1000)))
     import org.apache.spark.sql.functions._
@@ -284,5 +262,28 @@ class DatalogSpec extends SparkTestBase {
     val odd = program.run(edb, "q").collect().map(_.getLong(0)).toSet
     assert(even == (1L to 12L).filter(_ % 2 == 1).toSet, "odd nodes = even distance")
     assert(odd == (1L to 12L).filter(_ % 2 == 0).toSet, "even nodes = odd distance")
+  }
+
+  test("a min-fold seed clustered on its key at another width keeps the fold layout") {
+    // the seed arrives hash-partitioned on n at width 7 while the engine's
+    // width is the session's 4 shuffle partitions: the fold's groupBy then
+    // plans no exchange of its own, so the engine must lay it out itself
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    val edges = Seq((1L, 2L, 5L), (1L, 3L, 1L), (3L, 2L, 1L), (2L, 4L, 2L))
+      .toDF("x", "y", "w")
+    val seed = Seq((1L, 0L), (4L, 9L)).toDF("n", "d").repartition(7, col("n"))
+    val fold = Some(Fold("min", 1))
+    val dist = Program(Seq(
+      Rule(Atom("dist", Seq(V("n"), V("d"))),
+        Seq(Atom("seed", Seq(V("n"), V("d")))), fold = fold),
+      Rule(Atom("dist", Seq(V("y"), V("nd"))),
+        Seq(Atom("dist", Seq(V("x"), V("d"))),
+          Atom("edge", Seq(V("x"), V("y"), V("w")))),
+        lets = Seq(Let("nd", "d + w")), fold = fold)))
+      .run(Map("seed" -> seed, "edge" -> edges), "dist")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(dist == Map(1L -> 0L, 3L -> 1L, 2L -> 2L, 4L -> 4L))
   }
 }

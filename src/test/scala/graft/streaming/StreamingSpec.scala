@@ -56,22 +56,42 @@ class StreamingSpec extends SparkTestBase {
     assert(FsmStream.step(s(JobStatus.Started), JobEvent("x", "heartbeat", 77)).heartbeat == 77)
   }
 
+  test("FSM step agrees with the store's transition on every status × event") {
+    import graft.engine.{InMemoryJobStore, Job, JobGraph}
+    import scala.util.Try
+    val events = Seq("reserve", "finish", "fail", "abort", "reset", "heartbeat")
+    val moves = for (from <- JobStatus.all.toSeq; ev <- events) yield {
+      val store = new InMemoryJobStore; store.install()
+      store.transactGraph(JobGraph(Seq(Job("x", "t", status = from)), Nil))
+      val storeLegal = ev match {
+        case "reserve"   => store.reserveJob("x").isDefined
+        case "finish"    => Try(store.finishJob("x")).isSuccess
+        case "fail"      => Try(store.failJob("x", None)).isSuccess
+        case "reset"     => store.resetJob("x").isDefined
+        case "abort"     => store.abortJob("x"); store.jobInfo("x").get.status != from
+        case "heartbeat" => store.heartbeatJob("x"); true
+      }
+      val before = JobState("x", from, 0, 0)
+      val after = FsmStream.step(before, JobEvent("x", ev, 5))
+      val to = store.jobInfo("x").get.status
+      assert(after.status == to, s"$from × $ev: stream ${after.status}, store $to")
+      assert((after != before) == storeLegal, s"$from × $ev: stream and store disagree on legality")
+      (from, to)
+    }
+    // every legal move is in the table, and every table entry is a move
+    assert(moves.filter { case (from, to) => from != to }.toSet == JobStatus.transitions)
+  }
+
   test("detector parity: readiness anti-join over replayed FSM-stream state " +
        "equals the store's ready set on the truth-table matrix") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
     import graft.engine._
 
-    // the ReadinessSpec 7-configuration matrix, driven through the STORE...
-    val s = new InMemoryJobStore; s.install()
-    val jobs = (1 to 9).map(i => Job(s"j$i", s"type-j$i"))
-    val deps = Seq(Dep("j3", "j2"), Dep("j5", "j4"), Dep("j6", "j3"), Dep("j6", "j4"),
-                   Dep("j8", "j9"))
-    s.transactGraph(JobGraph(jobs, deps))
-    s.reserveJob("j2")
-    s.reserveJob("j4"); s.finishJob("j4")
-    s.abortJob("j7")
-    s.reserveJob("j9"); s.failJob("j9", None)
+    // the truth-table matrix, driven through the STORE...
+    val s = TruthTable.build(new InMemoryJobStore)
+    val jobs = s.snapshotJobs.map(_.copy(status = JobStatus.Unstarted, heartbeat = None))
+    val deps = s.snapshotDeps
 
     // ...and the SAME mutations replayed as a transition-event log through
     // the streaming FSM
@@ -105,7 +125,7 @@ class StreamingSpec extends SparkTestBase {
       .select("id").collect().map(_.getString(0)).toSet
 
     assert(streamReady == s.jobsReady(), "stream-state detector disagrees with the store")
-    assert(streamReady == Set("j1", "j5")) // the truth table's answer
+    assert(streamReady == TruthTable.ready)
   }
 
   test("streaming HLL sketch: windowed distinct-user estimate equals batch") {
