@@ -1,256 +1,24 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.immutable.ListMap
+import graft.engine.Reporter.Json
 
-/** Round benchmark. Three entry modes behind one `main`:
+/** Per-query wall clock over the registered queries, in one JVM:
+  * `runMain graft.Bench [<name>…]` times the named queries (no names: every
+  * query in `SparkEntry.queries`) on the data dir SPARK_GRAFT_SF_DIR and
+  * prints one JSON line on stdout. It writes no file.
   *
-  *  - no args (the driver's invocation): PARENT mode — split the full
-  *    sorted query list into SPARK_GRAFT_BENCH_CHUNKS (default 4)
-  *    contiguous ranges and run each range in a FRESH child JVM, then
-  *    re-measure every >1.3×-of-floor survivor in its own fresh JVM and
-  *    report min(suite, fresh). 337 queries' generated classes never
-  *    share one metaspace, so late-suite codegen/class pressure — the
-  *    mechanism behind every "environmental drift" episode since r5
-  *    (q79 r5, q80 r6, the 1.6–1.9× r7 cluster, q109's 6.08 s-vs-2.23 s
-  *    r8 artifact breach) — can no longer masquerade as a regression in
-  *    the committed artifact.
-  *  - `--chunk <name>… --out <file>`: CHILD mode — the classic
-  *    single-JVM protocol (session warm, per-query sf0.001 codegen warm,
-  *    min-of-2, in-suite isolated recheck at 1.3× floor) over the given
-  *    subset, JSON written to <file>.
-  *  - `<name>…` (manual): same single-JVM protocol over the subset,
-  *    JSON to stdout only, so the tracked BENCH.json keeps the full suite
-  *    (`runMain graft.Bench q109_prefix_filter_join`). The data dir is
-  *    SPARK_GRAFT_SF_DIR in every mode, e.g. a 10× dir from ScaleGen for
-  *    the scale experiment in BASELINE.md.
+  * Protocol: session warm-up, per-query warm-up at sf0.001 (when that dir
+  * sits beside the data dir), then per query the minimum of exactly two
+  * timed runs, each query followed by a quiesce.
   */
 object Bench {
 
-  def main(args: Array[String]): Unit =
-    if (args.isEmpty) parentMain()
-    else if (args(0) == "--chunk") {
-      val outIdx = args.indexOf("--out")
-      require(outIdx > 0 && outIdx + 1 < args.length, "--chunk <names>... --out <file>")
-      runSuite(args.slice(1, outIdx).toSeq, Some(args(outIdx + 1)))
-    } else runSuite(args.toSeq, None)
+  private type Query = (SparkSession, String) => DataFrame
 
-  // ———————————————————————— parent: chunked fresh-JVM orchestration ————————————————————————
-
-  private def javaCmdBase: Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    val javaBin = new java.io.File(new java.io.File(
-      System.getProperty("java.home"), "bin"), "java").getAbsolutePath
-    // child JVMs get the parent's exact flags (add-opens, -Xmx, -D) minus
-    // any attach/agent plumbing sbt may have added
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.toSeq
-      .filterNot(a => a.startsWith("-agentlib") || a.startsWith("-javaagent"))
-    Seq(javaBin) ++ jvmArgs ++ Seq("-cp", System.getProperty("java.class.path"))
-  }
-
-  /** Re-pin/recheck trigger: a reading above this ratio of its committed
-    * floor gets re-measured (in-suite isolated in the child; dedicated
-    * fresh JVM in the parent). 1.3 — r9's drift cluster sat at 1.36–1.5×
-    * and escaped the old 1.5× gate without fresh-JVM evidence. */
-  private val RepinRatio = 1.3
-
-  /** Explicit absolute exemption for the re-pin pass: a reading under
-    * this many seconds is JVM-noise-dominated (GC pauses and codegen
-    * jitter are a large fraction of wall), so a >1.3× ratio there is not
-    * evidence of a plan regression worth a dedicated fresh JVM. Exempted
-    * breaches are NOT silent — they are listed in the artifact under
-    * `subsecond_exempt` with their floors so the judge sees every one. */
-  private val RepinAbsFloorSec = 0.5
-
-  /** Parsed child artifact: per-query timings, failures, and the raw
-    * isolated-recheck entries (re-serialized verbatim into the merged
-    * artifact). Parsed with Jackson — regex/brace-counting over raw JSON
-    * mis-parses the moment any string value contains a brace (r9 advice).
-    */
-  private final case class ChunkArtifact(
-    times: Seq[(String, Double)], failed: Seq[String], rechecks: Seq[String])
-
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
-  private def parseChunk(json: String, label: String): ChunkArtifact = {
-    import scala.jdk.CollectionConverters._
-    val root =
-      try mapper.readTree(json)
-      catch { case e: Exception =>
-        throw new IllegalStateException(
-          s"bench chunk $label wrote malformed JSON: ${e.getMessage}")
-      }
-    val q = root.get("queries")
-    require(q != null && q.isObject, s"chunk $label artifact missing queries object")
-    val times = q.fieldNames.asScala.toSeq.map(n => n -> q.get(n).asDouble())
-    val f = root.get("failed")
-    require(f != null && f.isArray, s"chunk $label artifact missing failed array")
-    val failed = f.elements.asScala.map(_.asText()).toSeq
-    val rc = root.get("isolated_rechecks")
-    require(rc != null && rc.isArray, s"chunk $label artifact missing isolated_rechecks")
-    val rechecks = rc.elements.asScala.map(_.toString).toSeq
-    ChunkArtifact(times, failed, rechecks)
-  }
-
-  /** Run one fresh child JVM over `names`, return its raw JSON artifact. */
-  private def runChild(names: Seq[String], label: String): String = {
-    val out = java.io.File.createTempFile(s"bench_$label", ".json")
-    out.deleteOnExit()
-    val cmd = javaCmdBase ++ Seq("graft.Bench", "--chunk") ++ names ++
-      Seq("--out", out.getAbsolutePath)
-    System.err.println(s"[bench] chunk $label: ${names.size} queries, fresh JVM")
-    val pb = new ProcessBuilder(cmd: _*)
-    pb.redirectErrorStream(false)
-    pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-    pb.redirectOutput(ProcessBuilder.Redirect.DISCARD) // JSON comes via --out
-    val rc = pb.start().waitFor()
-    require(rc == 0, s"bench chunk $label exited $rc")
-    new String(java.nio.file.Files.readAllBytes(out.toPath),
-      java.nio.charset.StandardCharsets.UTF_8)
-  }
-
-  /** Write the current merged state to BENCH.json. Called after EVERY
-    * completed chunk with `partial = true` (and once at the very end with
-    * `partial = false`), so a driver-side timeout/kill at ANY point after
-    * the first chunk leaves a parseable artifact covering the completed
-    * chunks instead of nothing — the round-13 driver killed the bench
-    * phase at its 60-minute budget and got zero evidence because the only
-    * write happened at end-of-run. Atomic via write-to-temp + move so a
-    * kill mid-write can't leave a truncated file either. */
-  private def flushArtifact(json: String): Unit = {
-    val tmp = java.nio.file.Paths.get("BENCH.json.tmp")
-    java.nio.file.Files.write(tmp,
-      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, java.nio.file.Paths.get("BENCH.json"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  private def parentMain(): Unit = {
-    // SPARK_GRAFT_BENCH_ONLY=q01,q02 — local-iteration hook to exercise
-    // the chunked path on a subset; the driver never sets it
-    val all = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
-      case Some(csv) => csv.split(',').map(_.trim).filter(_.nonEmpty).toSeq.sorted
-      case None => SparkEntry.queries.keys.toSeq.sorted
-    }
-    val nChunks = sys.env.getOrElse("SPARK_GRAFT_BENCH_CHUNKS", "4").toInt
-      .max(1).min(all.size)
-    val per = (all.size + nChunks - 1) / nChunks
+  def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-    val times = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val failed = scala.collection.mutable.ListBuffer[String]()
-    val rechecks = scala.collection.mutable.ListBuffer[String]()
-    def partialJson(done: Int): String = {
-      val qs = times.map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${times.values.sum},"unit":"sec","partial":true,"chunks_done":$done,"chunks":$nChunks,"queries_total":${all.size},"queries":$qs,"failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},"isolated_rechecks":[${rechecks.mkString(",")}],"runs_per_query":2,"agg":"min","sf":"$sfDir"}"""
-    }
-    // parse each artifact as it arrives so a malformed chunk fails fast
-    // with its label instead of aborting a multi-hour run at merge time —
-    // and flush the merged-so-far artifact to disk after every chunk
-    all.grouped(per).zipWithIndex.foreach { case (names, i) =>
-      val c = parseChunk(runChild(names, s"c$i"), s"c$i")
-      c.times.foreach { case (n, t) => times(n) = t }
-      failed ++= c.failed
-      rechecks ++= c.rechecks
-      flushArtifact(partialJson(i + 1))
-      System.err.println(
-        s"[bench] chunk c$i merged (${times.size}/${all.size} queries); BENCH.json flushed (partial)")
-    }
-    require(times.size == all.size,
-      s"merged ${times.size} timings for ${all.size} queries")
-
-    // classify every >1.3×-of-floor survivor up front; what happens to
-    // the breaches depends on the repin knob below
-    val prior = loadPrior()
-    val freshRechecks = scala.collection.mutable.ListBuffer[(String, Double, Double)]()
-    val subsecExempt = scala.collection.mutable.ListBuffer[(String, Double, Double)]()
-    val pendingRepins = scala.collection.mutable.ListBuffer[(String, Double, Double)]()
-    times.foreach { case (name, t) =>
-      if (prior.get(name).exists(p => t > RepinRatio * p) &&
-          !failed.contains(name)) {
-        if (t > RepinAbsFloorSec) pendingRepins += ((name, t, prior(name)))
-        else subsecExempt += ((name, t, prior(name)))
-      }
-    }
-
-    def finalJson(): String = {
-      val qs = times.map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      val freshJson = freshRechecks.map { case (n, t, f) =>
-        s"""{"name":"$n","suite":$t,"fresh":$f}"""
-      }.mkString("[", ",", "]")
-      val exemptJson = subsecExempt.map { case (n, t, p) =>
-        s"""{"name":"$n","suite":$t,"floor":$p}"""
-      }.mkString("[", ",", "]")
-      val pendingJson = pendingRepins.map { case (n, t, p) =>
-        s"""{"name":"$n","suite":$t,"floor":$p}"""
-      }.mkString("[", ",", "]")
-      s"""{"metric":"total","value":${times.values.sum},"unit":"sec","partial":false,"queries":$qs,"failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},"isolated_rechecks":[${rechecks.mkString(",")}],"fresh_jvm_rechecks":$freshJson,"repin_pending":$pendingJson,"subsecond_exempt":$exemptJson,"repin_ratio":$RepinRatio,"repin_abs_floor_sec":$RepinAbsFloorSec,"chunks":$nChunks,"runs_per_query":2,"agg":"min","sf":"$sfDir"}"""
-    }
-    // the suite is COMPLETE here — flush partial:false NOW, before any
-    // floor-hygiene pass. r14: the driver's 60-min kill landed 8 s after
-    // the last chunk flushed, during the repin JVM's startup, and the
-    // complete 571-query artifact still read partial:true. A kill from
-    // this point on reads as the complete run it is.
-    flushArtifact(finalJson())
-
-    // fresh-JVM re-pin pass — FLOOR HYGIENE, not round evidence: every
-    // breach above gets a dedicated fresh JVM and the artifact carries
-    // both numbers, min reported (threshold 1.5→1.3 per r9 verdict #1).
-    // Gated behind SPARK_GRAFT_BENCH_REPIN, which the round driver never
-    // sets: the ~6+ min of repin JVMs is what blew the driver's wall in
-    // r13/r14. Local closing-bench runs set it to 1 (see
-    // tools/DRIVER_NOTES.md); with it unset the breaches are still
-    // listed verbatim under repin_pending so nothing lands silently.
-    val repinEnabled = sys.env.get("SPARK_GRAFT_BENCH_REPIN")
-      .exists(v => v == "1" || v == "true")
-    if (!repinEnabled && pendingRepins.nonEmpty)
-      System.err.println(
-        s"[bench] repin pass skipped (SPARK_GRAFT_BENCH_REPIN unset); " +
-          s"${pendingRepins.size} >$RepinRatio×-floor reading(s) listed under repin_pending")
-    if (repinEnabled) {
-      pendingRepins.toList.foreach { case (name, t, floor) =>
-        val repin = parseChunk(runChild(Seq(name), s"repin_$name"), s"repin_$name")
-        val fresh = repin.times.collectFirst { case (`name`, v) => v }.getOrElse(t)
-        System.err.println(
-          f"[bench] $name fresh-JVM re-pin: suite=$t%.2f s fresh=$fresh%.2f s (floor=$floor%.2f s)")
-        freshRechecks += ((name, t, fresh))
-        pendingRepins -= ((name, t, floor))
-        // keep the on-disk artifact current through the repin pass: a
-        // kill here still covers all queries, with this repin folded
-        times(name) = math.min(t, fresh)
-        flushArtifact(finalJson())
-      }
-    }
-    val json = finalJson()
-    println(json)
-    flushArtifact(json)
-  }
-
-  private def loadPrior(): Map[String, Double] = {
-    val f = new java.io.File("tools/bench_prior.json")
-    if (!f.isFile) {
-      // cwd-relative path: run from outside the repo root the prior map
-      // is empty and the regression self-check is inert — say so loudly
-      // instead of silently skipping every recheck
-      System.err.println(
-        s"[bench] WARNING: ${f.getAbsolutePath} not found — prior floors " +
-          s"unavailable, the >${RepinRatio}x regression self-check will not fire")
-      Map.empty
-    } else {
-      import scala.jdk.CollectionConverters._
-      val root = mapper.readTree(f)
-      root.fieldNames.asScala.map(n => n -> root.get(n).asDouble()).toMap
-    }
-  }
-
-  // ———————————————————————— child / manual: the single-JVM protocol ————————————————————————
-
-  private def runSuite(names: Seq[String], outFile: Option[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = Sessions.local(cpus).getOrCreate()
+    val spark = Sessions.local(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm the session (JVM/codegen/scheduler init + parquet footers) so
     // per-query timings measure the query, not first-job setup costs.
@@ -263,87 +31,60 @@ object Bench {
     // run pays whole-stage-codegen compilation (often 30-50% of a 1-2 s
     // query at sf0.1, and exactly 0% of the same query over 100 TB, where
     // the one-time compile amortizes to nothing). Warming on sf0.001
-    // compiles every generated class so the timed sf0.1 pass measures the
-    // part of the work that scales. Recorded in the JSON for transparency.
+    // compiles every generated class so the timed pass measures the part
+    // of the work that scales. Recorded in the JSON for transparency.
     val warmDir = {
-      val w = new java.io.File(sfDir).getParentFile
-      val cand = new java.io.File(w, "sf0.001")
+      val cand = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
       if (cand.isDirectory) Some(cand.toString) else None
     }
-    val subset: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
-      if (names.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.view.filterKeys(names.toSet).toMap
-    warmDir.foreach { wd =>
-      subset.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-        try { fn(spark, wd).count() } catch { case _: Throwable => () }
-      }
-    }
+    val names = args.toSet
+    val unknown = names -- SparkEntry.queries.keySet
+    require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(" ")}")
+    val subset: Seq[(String, Query)] = SparkEntry.queries.toSeq
+      .filter { case (n, _) => names.isEmpty || names(n) }.sortBy(_._1)
     // Drop every cached/checkpointed block and wait for the removal to
-    // complete, then give the JVM a GC point. The checkpointed RDDs of 90+
-    // queries otherwise accumulate in the block manager and late-suite
-    // queries pay the GC bill (observed twice now: q79 1.5 s isolated vs
-    // 4.5 s late-suite in r5; q80 1.0 s -> 4.7 s in r6 after 26 heavier
-    // queries were added BEFORE it in sort order). blocking=true matters:
-    // async unpersist leaves the blocks resident exactly while the next
-    // query allocates. Each query is an independent job at scale; timings
-    // should reflect that.
+    // complete, then give the JVM a GC point. The checkpointed RDDs of
+    // earlier queries otherwise accumulate in the block manager and
+    // late-suite queries pay the GC bill (q79 1.5 s alone vs 4.5 s
+    // late-suite in r5). blocking=true matters: async unpersist leaves the
+    // blocks resident exactly while the next query allocates.
     def quiesce(): Unit = {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
       System.gc()
     }
+    warmDir.foreach { wd =>
+      subset.foreach { case (_, fn) =>
+        try { fn(spark, wd).count() } catch { case _: Throwable => () }
+      }
+    }
+    quiesce()
     // each query is timed twice and the MIN reported: local-mode timings
     // swing ±10-15% on scheduler/GC noise, and min-of-2 tracks the
     // steady-state throughput a long-running cluster job actually gets
-    val failed = scala.collection.mutable.ListBuffer[String]()
-    def timeQuery(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
+    def timeQuery(name: String, fn: Query): Double = {
       val times = (1 to 2).map { _ =>
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count() }
         catch { case e: Throwable =>
-          if (!failed.contains(name)) {
-            failed += name
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          }
+          if (failed.add(name)) System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
         }
         (System.nanoTime() - t0) / 1e9
       }
       quiesce()
       times.min
     }
-    val firstPass = subset.toSeq.sortBy(_._1).map { case (name, fn) =>
-      name -> timeQuery(name, fn)
-    }
-    // In-suite self-check against the last committed driver numbers: any
-    // query that reads >RepinRatio× its best prior time gets ONE isolated
-    // re-measurement after a full quiesce, and the honest min of both
-    // measurements is reported (the parent adds the fresh-JVM layer on top).
-    val prior = loadPrior()
-    val rechecks = scala.collection.mutable.ListBuffer[(String, Double, Double)]()
-    val results = firstPass.map { case (name, t) =>
-      val suspect = prior.get(name).exists(p => t > RepinRatio * p && t > 0.3)
-      if (!suspect || failed.contains(name)) name -> t
-      else {
-        quiesce()
-        val iso = timeQuery(name, subset(name))
-        rechecks += ((name, t, iso))
-        System.err.println(f"[bench] $name recheck: first=$t%.2f s isolated=$iso%.2f s (prior=${prior(name)}%.2f s)")
-        name -> math.min(t, iso)
-      }
-    }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val warmJson = warmDir.map("\"" + _ + "\"").getOrElse("null")
-    val recheckJson = rechecks.map { case (n, t, i) =>
-      s"""{"name":"$n","first":$t,"isolated":$i}"""
-    }.mkString("[", ",", "]")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"isolated_rechecks":$recheckJson,"warmup":$warmJson,"runs_per_query":2,"agg":"min","sf":"$sfDir"}"""
-    println(json)
-    // a chunk also writes its artifact to a file: one JSON line over a
-    // chunk's queries can exceed a tail-bounded stdout capture
-    outFile.foreach(f => java.nio.file.Files.write(java.nio.file.Paths.get(f),
-      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    val results = ListMap.from(subset.map { case (name, fn) => name -> timeQuery(name, fn) })
+    println(Json.write(ListMap(
+      "metric" -> "total",
+      "value" -> results.values.sum,
+      "unit" -> "sec",
+      "queries" -> results,
+      "failed" -> failed.toSeq,
+      "warmup" -> warmDir.orNull,
+      "runs_per_query" -> 2,
+      "agg" -> "min",
+      "sf" -> sfDir)))
     spark.stop()
   }
 }

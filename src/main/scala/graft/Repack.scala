@@ -27,8 +27,7 @@ object Repack {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: Repack <dataDir> [<dataDir>...]")
-    val spark = Sessions
-      .local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt).getOrCreate()
+    val spark = Sessions.local(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
 

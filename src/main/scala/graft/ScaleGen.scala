@@ -56,8 +56,7 @@ object ScaleGen {
   def main(args: Array[String]): Unit = {
     val Array(src, out, copiesStr) = args.take(3)
     val copies = copiesStr.toInt
-    val spark = Sessions
-      .local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt).getOrCreate()
+    val spark = Sessions.local(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def write(df: DataFrame, name: String): Unit = {

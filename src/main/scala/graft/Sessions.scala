@@ -9,6 +9,9 @@ import org.apache.spark.sql.SparkSession
   * deadlocks executor threads in local mode: tasks park in
   * ChecksumCancellableFSDataOutputStream.close). */
 object Sessions {
+  /** The mains' local core count: SPARK_GRAFT_CPUS, default 32. */
+  def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
   def local(cpus: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cpus]")

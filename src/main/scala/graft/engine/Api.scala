@@ -11,18 +11,8 @@ final case class StoreConfig(adapter: String, options: Map[String, String] = Map
 
 final case class GraftConfig(
     store: StoreConfig,
-    detectorSleepMs: Long = 2000L,   // config.clj:62-63
-    sleepMs: Long = 10000L,          // config.clj:65-66
-    heartbeatSleepMs: Long = 60000L, // config.clj:68-69
-    heartbeatTolerance: Int = 5,     // config.clj:71-72
-    sentryDsn: Option[String] = None) { // config.clj:20-21 `:sentry {:dsn}`
-
-  def workerConfig: WorkerConfig = WorkerConfig(
-    detectorSleepMs = detectorSleepMs,
-    sleepMs = sleepMs,
-    heartbeatSleepMs = heartbeatSleepMs,
-    heartbeatTolerance = heartbeatTolerance)
-}
+    worker: WorkerConfig = WorkerConfig(), // config.clj:62-72
+    sentryDsn: Option[String] = None) // config.clj:20-21 `:sentry {:dsn}`
 
 object GraftConfig {
 
@@ -57,12 +47,14 @@ object GraftConfig {
       case _                   => Map.empty[String, String]
     })
     val hb = sub("heartbeat")
+    val dflt = WorkerConfig()
     GraftConfig(
       store = StoreConfig(adapter, options),
-      detectorSleepMs = long(m, "detector-sleep-time", 2000L),
-      sleepMs = long(m, "sleep-time", 10000L),
-      heartbeatSleepMs = long(hb, "sleep-time", 60000L),
-      heartbeatTolerance = long(hb, "tolerance", 5L).toInt,
+      worker = WorkerConfig(
+        detectorSleepMs = long(m, "detector-sleep-time", dflt.detectorSleepMs),
+        sleepMs = long(m, "sleep-time", dflt.sleepMs),
+        heartbeatSleepMs = long(hb, "sleep-time", dflt.heartbeatSleepMs),
+        heartbeatTolerance = long(hb, "tolerance", dflt.heartbeatTolerance.toLong).toInt),
       sentryDsn = sub("sentry").get("dsn").map(_.toString))
   }
 
@@ -181,7 +173,7 @@ object Graft {
             reporter: Option[Reporter] = None,
             onFatal: Throwable => Unit = Worker.stopOnly): Worker = {
     val sink = reporter.orElse(config.sentryDsn.map(Reporter.forDsn))
-    new Worker(store, handlers, config.workerConfig, sink, onFatal).start()
+    new Worker(store, handlers, config.worker, sink, onFatal).start()
   }
 
   /** api.clj:50-79 graph constructors. */

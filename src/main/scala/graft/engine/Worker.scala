@@ -104,8 +104,8 @@ final class Worker(store: JobStore, handlers: Map[String, Handler],
   /** One monitor pass: dead = heartbeat < now − tolerance×interval → reset
     * each (heartbeat.clj:35-43). Returns the reset ids. */
   def monitorOnce(): Set[String] = {
-    val thresh = System.currentTimeMillis() / 1000L -
-      config.heartbeatTolerance * (config.heartbeatSleepMs / 1000L)
+    val thresh = (System.currentTimeMillis() -
+      config.heartbeatTolerance * config.heartbeatSleepMs) / 1000L
     val dead = store.jobsDead(thresh)
     dead.foreach(store.resetJob)
     dead

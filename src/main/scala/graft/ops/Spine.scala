@@ -31,14 +31,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 object Spine {
 
   /** Window-vs-spine cutover in rows. 8M ≈ a ~200 MB single-task sort —
-    * comfortable executor headroom at bench scale; a deployment tunes it
-    * via SPARK_GRAFT_SPINE_THRESHOLD (also how the r16 scale experiment
-    * forces the distributed branch at sf1 to put its plan and timing on
-    * the record, BASELINE.md). Both branches are bit-identical (SpineSpec),
-    * so the knob is physical, never semantic; the driver's bench runs with
-    * it unset, i.e. exactly the r15 behavior. */
-  val DefaultThreshold: Long =
-    sys.env.get("SPARK_GRAFT_SPINE_THRESHOLD").map(_.toLong).getOrElse(8000000L)
+    * comfortable executor headroom at bench scale. Both branches are
+    * bit-identical (SpineSpec), so the cutover is physical, never
+    * semantic; a caller that needs the other branch passes `threshold`. */
+  val DefaultThreshold: Long = 8000000L
 
   /** [[lnFactorialLadder]]'s cutover is LOWER than the rank sites': its
     * window branch is a single-task sort + running-sum of the WHOLE
@@ -46,9 +42,8 @@ object Spine {
     * pre-partitioned-frame reuse the rank sites get. The r16 sf1
     * measurement put the crossover below ~1.5M rows (q456: 4.14 s window
     * vs 2.45 s spine at sf1; sf0.1 ladders are ~10× smaller and keep the
-    * window, so the driver bench is unchanged). Same env override. */
-  val LadderThreshold: Long =
-    sys.env.get("SPARK_GRAFT_SPINE_THRESHOLD").map(_.toLong).getOrElse(1000000L)
+    * window). */
+  val LadderThreshold: Long = 1000000L
 
   /** Append a global rank column (`rankCol`, 1-based BIGINT, ordered by
     * `ord`) and one running-sum column `cum_<c>` per entry of `sumCols`

@@ -135,4 +135,22 @@ class ExecutorSpec extends AnyFunSuite {
     assert(w.monitorOnce() == Set(id))
     assert(store.jobInfo(id).get.status == JobStatus.Unstarted)
   }
+
+  test("monitor tolerance honours sub-second heartbeat intervals") {
+    val store = new InMemoryJobStore; store.install()
+    val id = Squuid()
+    store.transactGraph(JobGraph.simpleGraph(Job(id, "t")))
+    store.reserveJob(id)
+    def ageHeartbeat(secs: Long): Unit = store.updateJob(id, _ => true,
+      _.copy(heartbeat = Some(System.currentTimeMillis() / 1000 - secs)))
+    // 5 missed beats of 500 ms: dead after 2.5 s of silence
+    val w = new Worker(store, Map.empty,
+      WorkerConfig(heartbeatSleepMs = 500, heartbeatTolerance = 5, seed = Some(7)))
+    ageHeartbeat(1)
+    assert(w.monitorOnce().isEmpty)
+    assert(store.jobInfo(id).get.status == JobStatus.Started)
+    ageHeartbeat(10)
+    assert(w.monitorOnce() == Set(id))
+    assert(store.jobInfo(id).get.status == JobStatus.Unstarted)
+  }
 }
